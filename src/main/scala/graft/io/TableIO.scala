@@ -2,7 +2,12 @@ package graft.io
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.json4s._
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
 
 /** Storage abstraction with atomic-snapshot stage commit — the Iceberg-shaped
   * seam of SURVEY.md §7 (no Iceberg runtime jar ships in this sandbox, so the
@@ -26,58 +31,75 @@ trait TableIO {
   def readStage(spark: SparkSession, name: String, configHash: String): Option[DataFrame]
   /** Row count recorded at stage commit, if the backend tracks one — lets
     * metrics reporting skip a re-count job over the stage table (the
-    * manifest already paid for the count at write time). */
+    * commit's own write job already counted the rows). */
   def stageRows(name: String, configHash: String): Option[Long] = None
 }
 
 /** Parquet + manifest implementation. Commit protocol: write parquet to
   * `<root>/<name>/data`, then atomically move a manifest JSON into place;
   * readers treat the manifest as the commit record (crash between the two
-  * leaves no manifest → stage is simply recomputed on resume). */
+  * leaves no manifest → stage is simply recomputed on resume).
+  *
+  * The manifest is `{"stage","configHash","rows","schema"}`: the row count
+  * is observed inside the write job and the schema is the frame's own, so
+  * a commit is exactly one Spark job and a reopen runs none — like the
+  * reference's `create=false` reopen, the file alone says what the data
+  * is. A manifest without a schema (written before the field existed)
+  * reads as absent, so its stage is recomputed once. */
 final class ParquetTableIO(root: String) extends TableIO {
   private def dir(name: String) = Paths.get(root, name)
   private def manifest(name: String) = dir(name).resolve("MANIFEST.json")
+  private def data(name: String) = dir(name).resolve("data").toString
 
   override def writeStage(df: DataFrame, name: String, configHash: String): Unit = {
-    val data = dir(name).resolve("data")
     // invalidate any PREVIOUS commit before touching its data: the
     // overwrite below deletes the old part files first, so a crash
     // mid-rewrite would otherwise leave the old manifest pointing at
     // torn new-config data, and a later run under the old configHash
     // would pass the manifest check and silently adopt it
     Files.deleteIfExists(manifest(name))
+    // the row count rides the write job: observed directly under the
+    // write, it sits in the write's result stage, where each task's
+    // update is applied exactly once (no re-read count job)
+    val written = Observation()
     // zstd: markedly better ratio than the snappy default at similar read
     // speed (guide §6) — stage tables are the long-lived bytes of a build
-    df.write.option("compression", "zstd").mode("overwrite")
-      .parquet(data.toString)
-    val rows = df.sparkSession.read.parquet(data.toString).count()
+    df.observe(written, count(lit(1)).as("rows"))
+      .write.option("compression", "zstd").mode("overwrite").parquet(data(name))
+    val rows = written.get("rows").asInstanceOf[Long]
     val tmp = dir(name).resolve(".MANIFEST.tmp")
-    Files.writeString(tmp,
-      s"""{"stage":"$name","configHash":"$configHash","rows":$rows}""",
-      StandardCharsets.UTF_8)
+    Files.writeString(tmp, compact(render(
+      ("stage" -> name) ~ ("configHash" -> configHash) ~ ("rows" -> rows) ~
+        ("schema" -> parse(df.schema.json)))), StandardCharsets.UTF_8)
     Files.move(tmp, manifest(name), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  override def readStage(spark: SparkSession, name: String,
-      configHash: String): Option[DataFrame] = {
+  /** The manifest's (rows, schema) if stage `name` is committed under
+    * `configHash`; a missing, other-config or schema-less manifest is no
+    * commit. */
+  private def committed(name: String, configHash: String): Option[(Long, StructType)] = {
     val m = manifest(name)
-    if (Files.exists(m) &&
-      Files.readString(m).contains(s""""configHash":"$configHash"""")) {
-      Some(spark.read.parquet(dir(name).resolve("data").toString))
-    } else None
+    if (!Files.exists(m)) None
+    else {
+      val json = parse(Files.readString(m))
+      (json \ "configHash", json \ "rows", json \ "schema") match {
+        case (JString(`configHash`), JInt(rows), schema: JObject) =>
+          Some((rows.toLong,
+            DataType.fromJson(compact(render(schema))).asInstanceOf[StructType]))
+        case _ => None
+      }
+    }
   }
 
-  private val RowsRe = """"rows":(\d+)""".r
-  override def stageRows(name: String, configHash: String): Option[Long] = {
-    val m = manifest(name)
-    if (Files.exists(m)) {
-      val s = Files.readString(m)
-      if (s.contains(s""""configHash":"$configHash""""))
-        RowsRe.findFirstMatchIn(s).map(_.group(1).toLong)
-      else None
-    } else None
-  }
+  override def readStage(spark: SparkSession, name: String,
+      configHash: String): Option[DataFrame] =
+    committed(name, configHash).map { case (_, schema) =>
+      spark.read.schema(schema).parquet(data(name))
+    }
+
+  override def stageRows(name: String, configHash: String): Option[Long] =
+    committed(name, configHash).map(_._1)
 }
 
 /** Checkpoint-resumable stage chaining: each stage is computed only if its

@@ -40,7 +40,8 @@ class R6OptimizationSpec extends AnyFunSuite {
       (4L, "tabs\tand  spaces"),
       (5L, "unicode: héllo wörld ✓"),
       (6L, "a"),
-      (7L, "0123456789" * 50)
+      (7L, "0123456789" * 50),
+      (8L, "\uD83D\uDE00 emoji caption") // astral plane: a surrogate pair
     ).toDF("doc_id", "text")
     // old: per-character HOF chain
     val chars = filter(split(col("text"), ""), c => length(c) === 1)
@@ -58,7 +59,8 @@ class R6OptimizationSpec extends AnyFunSuite {
 
   test("compiled posHash ≡ r5 HOF chain; clusterSplit assignment identical") {
     import spark.implicits._
-    val keys = Seq("img_000_01", "img_000_10", "", "αβγ", "x").toDF("k")
+    val keys = Seq("img_000_01", "img_000_10", "", "αβγ", "x",
+      "\uD83D\uDE00 emoji caption").toDF("k")
     val old = keys.select(col("k"), posHashHof(col("k"), 1000003L).as("h"))
       .collect().map(r => (r.getString(0), if (r.isNullAt(1)) null else r.getLong(1)))
     val neu = keys.select(col("k"),
