@@ -7,10 +7,15 @@ package graft
   *
   *   sbt -batch "runMain graft.UnionFindProbe"   # no Spark session needed
   *
-  * Methodology: materialize the collected edge array (the dominant
-  * retained structure — what `sym.as[(String,String)].collect()` returns)
-  * plus the union-find's index/names/parent/rank/minOf tables, and diff
-  * used heap across forced GCs. Ids are 36-char (image-id width).
+  * Methodology: materialize the collected raw edge array (the dominant
+  * retained structure — what the local path's bounded
+  * `as[(String,String)].limit(cap + 1).collect()` returns) plus the
+  * union-find's index/names/parent/rank/minOf tables, and diff used heap
+  * across forced GCs. Ids are 36-char (image-id width). Two shapes:
+  *  - `clusters`: dedup-shaped, one hub and 4 spokes per cluster (1.25
+  *    vertices per raw row), each row a canonical pair;
+  *  - `matching`: the worst case per raw row, every row two ids no other
+  *    row shares (2 vertices per row, the most a row can intern).
   */
 object UnionFindProbe {
   private def usedHeap(): Long = {
@@ -20,24 +25,26 @@ object UnionFindProbe {
     r.totalMemory() - r.freeMemory()
   }
 
+  private def id(n: Long, tag: Char): String = {
+    val head = f"img_$n%016d_$tag"
+    head + "a" * (36 - head.length)
+  }
+
   def main(args: Array[String]): Unit = {
-    val idWidth = 36
-    for (n <- Seq(500000, 1000000, 2000000)) {
+    val shapes = Seq[(String, Int => (String, String))](
+      "clusters" -> (i => (id(i / 4, 'a'), id(i / 4, ('b' + i % 4).toChar))),
+      "matching" -> (i => (id(i, 'a'), id(i, 'b'))))
+    for ((shape, row) <- shapes; n <- Seq(250000, 500000, 1000000)) {
       val before = usedHeap()
-      // ~dedup-shaped graph: clusters of ~4, ids unique 36-char strings
-      val edges = Array.tabulate(n) { i =>
-        val g = i / 4
-        (f"img_${g}%016d_${"a" * (idWidth - 21)}",
-          f"img_${g}%016d_${('b' + i % 4).toChar}${"a" * (idWidth - 22)}")
-      }
+      val edges = Array.tabulate(n)(row)
       val mid = usedHeap()
       val labels = graft.pipeline.ConnectedComponents.labelsOf(edges)
       val after = usedHeap()
-      println(f"edges=$n%8d collect=${(mid - before) / 1e6}%8.1f MB " +
-        f"unionfind=${(after - mid) / 1e6}%8.1f MB " +
-        f"total=${(after - before) / 1e6}%8.1f MB " +
-        f"perEdge=${(after - before).toDouble / n}%6.1f B " +
-        f"(labels=${labels.length})")
+      println(f"$shape%-8s rows=$n%8d collect=${(mid - before) / 1e6}%7.1f MB " +
+        f"unionfind=${(after - mid) / 1e6}%7.1f MB " +
+        f"total=${(after - before) / 1e6}%7.1f MB " +
+        f"perRow=${(after - before).toDouble / n}%6.1f B " +
+        f"(vertices=${labels.length})")
     }
   }
 }

@@ -288,17 +288,25 @@ object TextOps {
     val tb = DedupOps.sketchBands(ts, bands, rows)
     val bb = DedupOps.sketchBands(bs, bands, rows)
       .select(col("doc_id").as("bench_id"), col("band_id"), col("band_key"))
-    val cands = tb.join(broadcast(bb), Seq("band_id", "band_key"))
-      .select("doc_id", "bench_id").distinct()
+    val cands = mat(tb.join(broadcast(bb), Seq("band_id", "band_key"))
+      .select("doc_id", "bench_id").distinct())
+    // the candidate count grows with contamination, not with the bench, so
+    // the broadcast is forced only while the candidates' size, estimated
+    // per row as the planner does (8 bytes + the schema's default size),
+    // fits the session's autoBroadcastJoinThreshold; above it the planner
+    // picks the join
+    val candBytes = cands.count() * (8L + cands.schema.defaultSize)
+    val candSide = if (candBytes <= train.sparkSession.sessionState.conf
+      .autoBroadcastJoinThreshold) broadcast(cands) else cands
     val jacc = udf((x: Seq[Long], y: Seq[Long]) =>
       graft.core.MinHash.exactJaccard(x.toSet, y.toSet))
-    // candidates (contamination-bounded, tiny) broadcast against the
-    // training sketch table — not the other way around: `cands.join(ts)`
+    // candidates (contamination-bounded, usually tiny) broadcast against
+    // the training sketch table — not the other way around: `cands.join(ts)`
     // planned a full shuffle of every training doc's shingle set unless AQE
     // happened to convert it, contradicting the no-training-side-shuffle
     // scale shape documented above (r5 ADVICE)
     ts.select(col("doc_id"), col("sh"))
-      .join(broadcast(cands), "doc_id")
+      .join(candSide, "doc_id")
       .join(broadcast(bs.select(col("doc_id").as("bench_id"),
         col("sh").as("bench_sh"))), "bench_id")
       .withColumn("jacc", round(jacc(col("sh"), col("bench_sh")), 4))

@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Connected components over a pair table via iterative DataFrame self-joins
   * (min-label propagation), the explicit clustering step the north rule adds
@@ -9,11 +10,14 @@ import org.apache.spark.sql.functions._
   *
   * Cost shape matters more than data volume here: at dedup workloads the
   * edge set is a small fraction of the vertex set, and clusters are
-  * near-cliques (diameter 2-3). Two paths, one contract: small edge sets
-  * (post-symmetrize count <= `localEdgeThreshold`) collapse via a
-  * driver-local union-find — a distributed fixpoint on kilobytes is pure
-  * scheduling overhead — while large ones run the iterative loop. For the
-  * loop:
+  * near-cliques (diameter 2-3). Two paths, one contract. Small edge sets
+  * collapse via a driver-local union-find — a distributed fixpoint on
+  * kilobytes is pure scheduling overhead: the raw pair rows come to the
+  * driver in ONE bounded collect (`limit(⌊localEdgeThreshold/2⌋ + 1)`, no
+  * shuffle, no checkpoint, no count job), since union-find is indifferent
+  * to edge direction, duplicate pairs and self-loops. Only when that
+  * collect overflows its cap does the iterative loop run, and the loop
+  * alone symmetrizes and distincts the edge set. For the loop:
   *  - propagation runs ONLY over vertices incident to an edge; the (vast)
   *    singleton majority never enters the loop and is unioned back at the end;
   *  - each round combines one-hop neighbor propagation with pointer
@@ -34,19 +38,30 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  /** Measured driver-heap retention of the local path (UnionFindProbe,
-    * 36-char ids, forced-GC diff): ~225 B per symmetrized edge — 113 MB at
-    * 0.5M, 227 MB at 1M, 450 MB at 2M edges (the collected tuple array is
-    * ~5/6 of it, the union-find tables ~1/6). The default threshold spends
-    * at most a quarter of the driver heap on it, capped at 16M edges
-    * (3.6 GB — the cap binds only above ~14 GB of driver heap; below
-    * that the heap/4 term governs). The cap was 2M through round 4, tuned
-    * for a small driver: the round-5 735k-image scaling run crossed it at
-    * 2.5M edges, fell into the distributed fixpoint, and its per-round
-    * scheduling floor showed up as a ~50 s Amdahl tail at BOTH 2 and 8
-    * cores (2→8 efficiency 0.720) — the loop's per-iteration cost is
-    * fixed shuffle/scheduling until edge volume is orders of magnitude
-    * larger, which is precisely when the driver no longer fits it. */
+  /** Driver-heap budget per symmetrized edge that sizes the default
+    * threshold: `localEdgeThreshold` counts symmetrized edges, and the
+    * default spends at most a quarter of the driver heap at this rate,
+    * capped at 16M edges (the cap binds only above ~14 GB of driver heap;
+    * below that the heap/4 term governs).
+    *
+    * What the local path actually retains is measured per RAW row
+    * (UnionFindProbe, 36-char ids, forced-GC diff of the collected tuple
+    * array plus the label array the kernel returns): ~224 B per row for
+    * dedup-shaped clusters (1.25 ids per row) and 245 B per row in the
+    * worst case, a matching whose every row brings two fresh ids (122 MB
+    * at 0.5M rows, 245 MB at 1M; the tuple array is ~3/4 of it). The
+    * collect stops at ⌊threshold/2⌋ + 1 raw rows, so the worst case
+    * retains ~(threshold/2) × 245 B ≈ 0.54 × the heap/4 budget — a raw row
+    * is at most two symmetrized edges, and the kernel, which runs only on
+    * a collect within the cap, interns at most `threshold` ids.
+    *
+    * The cap was 2M through round 4, tuned for a small driver: the
+    * round-5 735k-image scaling run crossed it at 2.5M edges, fell into
+    * the distributed fixpoint, and its per-round scheduling floor showed
+    * up as a ~50 s Amdahl tail at BOTH 2 and 8 cores (2→8 efficiency
+    * 0.720) — the loop's per-iteration cost is fixed shuffle/scheduling
+    * until edge volume is orders of magnitude larger, which is precisely
+    * when the driver no longer fits it. */
   val MeasuredBytesPerEdge = 225L
 
   def defaultLocalEdgeThreshold: Long =
@@ -60,37 +75,62 @@ object ConnectedComponents {
     *   by fixed shuffle/scheduling, not data (measured: ~6 s for a
     *   3.7k-image corpus whose union-find takes milliseconds; ~36 s for a
     *   418k-image corpus's 1.5M edges, an Amdahl tail that caps measured
-    *   N->4N efficiency), so small edge sets belong on the driver. The
-    *   default is `defaultLocalEdgeThreshold`: at the measured ~225 B/edge
-    *   (see above — NOT the ~100 B a naive estimate gives; tuple + boxed
-    *   HashMap overhead dominate), 2M edges retain ~450 MB, and the
-    *   heap-derived cap keeps the path under 25% of a smaller driver. The
-    *   switch is on EDGE volume: dup edges are a small fraction of rows,
-    *   and the (vast) singleton majority never enters either path. Results
-    *   are bit-identical (same min-id-per-component contract, asserted in
-    *   the spec); past the threshold the pointer-doubling loop is the
-    *   scale path.
+    *   N->4N efficiency), so small edge sets belong on the driver. The test
+    *   is made on the raw rows: at most ⌊threshold/2⌋ of them take the
+    *   local path. For canonical, duplicate-free pairs (`a < b`, distinct —
+    *   DedupJob's `pairs` stage) that is exactly "symmetrized count <=
+    *   threshold"; raw input with duplicates, both directions or
+    *   self-loops may fall back to the loop a little earlier than its
+    *   symmetrized count would, never later. `0` forces the loop. The
+    *   default is `defaultLocalEdgeThreshold` (see `MeasuredBytesPerEdge`
+    *   for the measured heap it costs). The switch is on EDGE volume: dup
+    *   edges are a small fraction of rows, and the (vast) singleton
+    *   majority never enters either path. Results are bit-identical (same
+    *   min-id-per-component contract, asserted in the spec); past the
+    *   threshold the pointer-doubling loop is the scale path.
     * @return (id, cluster_id) with cluster_id = min id in the component
     */
   def run(spark: SparkSession, edges: DataFrame, vertices: DataFrame,
       maxIters: Int = 25,
       localEdgeThreshold: Long = defaultLocalEdgeThreshold): DataFrame = {
+    import spark.implicits._
+    val raw = edges.select(col("a").as("src"), col("b").as("dst"))
+    // union-find ignores direction, duplicates and self-loops, so the raw
+    // rows go to the driver as they are: one bounded collect, no shuffle.
+    // A raw row stands for at most two symmetrized edges, so a cap of
+    // threshold/2 raw rows keeps the guard on the symmetrized count.
+    val cap = math.max(0L, math.min(localEdgeThreshold / 2, Int.MaxValue - 1L)).toInt
+    val local = raw.schema("src").dataType match {
+      case LongType => collectAtMost[(Long, Long)](raw, cap)
+        .map(e => labelsOfLong(e).toSeq.toDF("id", "cluster_id"))
+      case _ => collectAtMost[(String, String)](raw, cap)
+        .map(e => labelsOf(e).toSeq.toDF("id", "cluster_id"))
+    }
+    local match {
+      case Some(labels) => labels.union(singletons(vertices, labels))
+      case None => distributed(raw, vertices, maxIters)
+    }
+  }
+
+  /** All rows of `df` if there are at most `cap` of them, else None, from
+    * one `limit(cap + 1)` collect: the driver never holds more than
+    * `cap + 1` rows. */
+  private[pipeline] def collectAtMost[T: Encoder](df: DataFrame, cap: Int): Option[Array[T]] =
+    Some(df.as[T].limit(cap + 1).collect()).filter(_.length <= cap)
+
+  /** Vertices with no incident edge, each its own cluster. */
+  private def singletons(vertices: DataFrame, labels: DataFrame): DataFrame =
+    vertices.join(labels.select("id"), Seq("id"), "left_anti")
+      .select(col("id"), col("id").as("cluster_id"))
+
+  /** The pointer-doubling loop over the symmetrized, checkpointed edge
+    * table — the scale path past the local threshold. */
+  private def distributed(raw: DataFrame, vertices: DataFrame,
+      maxIters: Int): DataFrame = {
     // symmetrize once; checkpoint — reused every iteration
     val sym = graft.core.Checkpoints.ckpt(
-      edges.select(col("a").as("src"), col("b").as("dst"))
-        .union(edges.select(col("b").as("src"), col("a").as("dst")))
+      raw.union(raw.select(col("dst").as("src"), col("src").as("dst")))
         .distinct())
-
-    if (sym.count() <= localEdgeThreshold) {
-      val labels = sym.schema("src").dataType match {
-        case org.apache.spark.sql.types.LongType => localUnionFindLong(spark, sym)
-        case _ => localUnionFind(spark, sym)
-      }
-      unpersistCheckpoint(sym) // collected — nothing references it anymore
-      val singletons = vertices.join(labels.select("id"), Seq("id"), "left_anti")
-        .select(col("id"), col("id").as("cluster_id"))
-      return labels.union(singletons)
-    }
 
     // only edge-incident vertices propagate
     var labels = graft.core.Checkpoints.ckpt(
@@ -143,10 +183,7 @@ object ConnectedComponents {
         " this indicates a fingerprint collision or a bug)")
     // the final labels are their own checkpoint; the edge table is done
     unpersistCheckpoint(sym)
-    // singletons (no incident edge) are their own cluster
-    val singletons = vertices.join(labels.select("id"), Seq("id"), "left_anti")
-      .select(col("id"), col("id").as("cluster_id"))
-    labels.union(singletons)
+    labels.union(singletons(vertices, labels))
   }
 
   /** Release a `localCheckpoint`'s persisted RDD explicitly (see
@@ -155,27 +192,10 @@ object ConnectedComponents {
   private def unpersistCheckpoint(df: DataFrame): Unit =
     graft.core.Checkpoints.release(df)
 
-  /** Driver-local path for small edge sets: classic union-find with path
-    * compression + union by rank, then min id per root — exactly the
-    * min-label fixpoint the loop computes, in one collect and zero
-    * iterations. */
-  private def localUnionFind(spark: SparkSession, sym: DataFrame): DataFrame = {
-    import spark.implicits._
-    // typed collect: tuples of interned-free strings, no Row wrappers
-    val e = sym.as[(String, String)].collect()
-    labelsOf(e).toSeq.toDF("id", "cluster_id")
-  }
-
-  /** Long-keyed twin of [[localUnionFind]] — same contract (min id per
-    * component, numeric order), primitive arrays end to end. */
-  private def localUnionFindLong(spark: SparkSession, sym: DataFrame): DataFrame = {
-    import spark.implicits._
-    val e = sym.as[(Long, Long)].collect()
-    labelsOfLong(e).toSeq.toDF("id", "cluster_id")
-  }
-
   /** The driver-side kernel, separated so UnionFindProbe can measure its
-    * real heap retention (see `localEdgeThreshold` scaladoc). */
+    * real heap retention (see `MeasuredBytesPerEdge`): classic union-find
+    * with path compression + union by rank, then min id per root — exactly
+    * the min-label fixpoint the loop computes. */
   private[graft] def labelsOf(e: Array[(String, String)]): Array[(String, String)] = {
     val index = new java.util.HashMap[String, Integer]()
     val names = scala.collection.mutable.ArrayBuffer.empty[String]

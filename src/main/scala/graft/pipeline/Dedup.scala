@@ -441,8 +441,9 @@ object Dedup {
       val (cands, ssp) = graft.core.Checkpoints.par2(
         () => candidatesMaterialized(candidateBands(sigs, cfg), cfg),
         () => graft.core.Checkpoints.ckpt(substringPairs(sigs, cfg)))
-      // no .distinct() here: ConnectedComponents symmetrizes + distincts the
-      // edge set anyway — one shuffle instead of two
+      // no .distinct() here: the local union-find is indifferent to
+      // duplicate pairs, and the distributed loop distincts its
+      // symmetrized edge table itself
       val pairs = verified(cands, sigs, cfg).union(ssp)
       clusters(images, pairs)
     }

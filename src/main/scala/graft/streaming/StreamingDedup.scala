@@ -1139,7 +1139,8 @@ object StreamingDedup {
   /** Periodic clustering over the accumulated pair log: connected
     * components across every id seen so far. The pair log may hold
     * duplicate pairs from bucket re-probes / replayed batches —
-    * `ConnectedComponents` symmetrizes + distincts the edge set — and the
+    * `ConnectedComponents` needs no distinct pairs (union-find ignores
+    * duplicates; the distributed loop distincts its own edge table) — and the
     * signature log may hold duplicate ids from a replayed batch (state
     * written, checkpoint not yet committed), so the vertex set is
     * explicitly distinct-ed: the output has exactly one row per image.

@@ -1,0 +1,39 @@
+package graft
+
+import java.nio.file.Files
+import org.apache.spark.sql.functions.col
+import org.scalatest.funsuite.AnyFunSuite
+import graft.images.SyntheticCorpus
+import graft.pipeline.ConnectedComponents
+
+/** Spark job budgets of the shipped surfaces. Fixed per-job costs are most
+  * of a small call, so each count is pinned where it stands: a change that
+  * adds jobs fails here, and a change that cuts them lowers the pin. */
+class JobBudgetSpec extends AnyFunSuite {
+  private lazy val spark = SparkTestBase.spark
+
+  test("connected components, local path: one job and no shuffle before the result is used") {
+    import spark.implicits._
+    // RDD-backed, so the collect is a real job (a local relation would be
+    // collected on the driver without one)
+    val edges = spark.sparkContext.parallelize(
+      Seq(("a", "b"), ("b", "c"), ("x", "y")), 1).toDF("a", "b")
+    val vertices = Seq("a", "b", "c", "x", "y", "z").toDF("id")
+    assert(SparkJobs.during(spark)(ConnectedComponents.run(spark, edges, vertices)) ===
+      SparkJobs.Usage(jobs = 1, shuffleWriteBytes = 0L))
+  }
+
+  test("DedupJob.run fresh and resumed, and one collected QueryJob.run: pinned job counts") {
+    val work = Files.createTempDirectory("graft-jobbudget").resolve("work").toString
+    val (generated, _) = SyntheticCorpus.generate(spark,
+      nGroups = 8, variantsPerGroup = 2, nDistractors = 6)
+    val images = generated.localCheckpoint()
+    val queries = images.orderBy("image_id").limit(8).localCheckpoint()
+    val fresh = SparkJobs.during(spark)(DedupJob.run(spark, images, work)).jobs
+    val resumed = SparkJobs.during(spark)(DedupJob.run(spark, images, work)).jobs
+    val query = SparkJobs.during(spark)(
+      QueryJob.run(spark, work, queries, topN = 3).collect()).jobs
+    assert((fresh, resumed, query) === ((29, 12, 5)),
+      "(DedupJob fresh, DedupJob resumed, QueryJob)")
+  }
+}

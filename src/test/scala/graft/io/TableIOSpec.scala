@@ -1,32 +1,16 @@
 package graft.io
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkTestBase
+import graft.{SparkJobs, SparkTestBase}
 
 class TableIOSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
   /** The number of Spark jobs `body` submitted. */
-  private def jobsDuring(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBusDrain(sc) // earlier tests' events must not reach the counter
-    sc.addSparkListener(counter)
-    try {
-      body
-      ListenerBusDrain(sc)
-      jobs.get
-    } finally sc.removeSparkListener(counter)
-  }
+  private def jobsDuring(body: => Any): Int = SparkJobs.during(spark)(body).jobs
 
   private def sortedRows(df: DataFrame): Seq[Row] =
     df.collect().toSeq.sortBy(_.getString(0))

@@ -430,6 +430,28 @@ class OpsSpec extends AnyFunSuite {
     assert(brute.nonEmpty, "fixture should contain cross-split near-dups")
   }
 
+  test("fuzzy decontaminate: candidates over the broadcast budget take the planner's join, same rows") {
+    val train = docs.filter(pmod(col("doc_id"), lit(10L)) =!= 0)
+    val bench = docs.filter(pmod(col("doc_id"), lit(10L)) === 0)
+    def rows = TextOps.fuzzyDecontaminate(train, bench, 0.5).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    def broadcastJoins = TextOps.fuzzyDecontaminateUnscoped(train, bench, 0.5)
+      .queryExecution.sparkPlan.collect {
+        case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => j
+      }.size
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val (hinted, hintedJoins) = (rows, broadcastJoins)
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "-1") // no candidate set fits: the hint is dropped
+    val (planned, plannedJoins) =
+      try (rows, broadcastJoins)
+      finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(hinted.nonEmpty)
+    assert(planned === hinted)
+    assert(hintedJoins === 3) // bench bands, candidates, bench shingles
+    assert(plannedJoins === 2) // the candidates join is the planner's
+  }
+
   test("fuzzy decontaminate catches a token edit the exact 13-gram rule misses") {
     import spark.implicits._
     // 25 tokens, one edit at position 13: EVERY shared 13-gram window

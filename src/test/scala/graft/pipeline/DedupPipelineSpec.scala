@@ -237,6 +237,74 @@ class DedupPipelineSpec extends AnyFunSuite {
     assert(dec === expect)
   }
 
+  test("connected components: raw pairs (duplicates, both directions, self-loops) — local labels = loop labels, string and long keys") {
+    import spark.implicits._
+    // f and g appear only in edges, z only in vertices; g and c carry
+    // self-loops; (a, b) and (h, i) come duplicated and in both directions
+    val strPairs = Seq(("b", "a"), ("a", "b"), ("a", "b"), ("c", "c"),
+      ("c", "d"), ("d", "c"), ("e", "f"), ("g", "g"), ("h", "i"), ("i", "h"),
+      ("h", "i"))
+    val strIds = Seq("a", "b", "c", "d", "e", "h", "z")
+    val strExpect = Map("a" -> "a", "b" -> "a", "c" -> "c", "d" -> "c",
+      "e" -> "e", "f" -> "e", "g" -> "g", "h" -> "h", "i" -> "h", "z" -> "z")
+    def strLabels(th: Long) = ConnectedComponents.run(spark,
+        strPairs.toDF("a", "b"), strIds.toDF("id"), localEdgeThreshold = th)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toSeq.sorted
+    val strLoop = strLabels(0L)
+    assert(strLoop === strExpect.toSeq.sorted) // one row per id
+    assert(strLabels(Long.MaxValue) === strLoop)
+
+    // the same graph on mixed-sign long keys: numeric, not text, order
+    val code = Map("a" -> -3L, "b" -> -7L, "c" -> 5L, "d" -> -1L, "e" -> 10L,
+      "f" -> 2L, "g" -> 0L, "h" -> 8L, "i" -> 9L, "z" -> -20L)
+    val longPairs = strPairs.map { case (x, y) => (code(x), code(y)) }
+    def longLabels(th: Long) = ConnectedComponents.run(spark,
+        longPairs.toDF("a", "b"), strIds.map(code).toDF("id"),
+        localEdgeThreshold = th)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+    val longLoop = longLabels(0L)
+    assert(longLoop.toMap === Map(-3L -> -7L, -7L -> -7L, 5L -> -1L,
+      -1L -> -1L, 10L -> 2L, 2L -> 2L, 0L -> 0L, 8L -> 8L, 9L -> 8L,
+      -20L -> -20L))
+    assert(longLoop.size === code.size)
+    assert(longLabels(Long.MaxValue) === longLoop)
+  }
+
+  test("connected components: the local path holds floor(threshold/2) raw rows; one more falls to the loop") {
+    import spark.implicits._
+    // an RDD-backed single-partition frame, so the local path's collect is
+    // a real Spark job (a local relation would be collected without one)
+    val edges = spark.sparkContext.parallelize(
+      Seq(("a", "b"), ("b", "c"), ("x", "y"), ("y", "x")), 1).toDF("a", "b")
+    val vertices = Seq("a", "b", "c", "x", "y", "z").toDF("id")
+    def labels(th: Long): (Seq[(String, String)], graft.SparkJobs.Usage) = {
+      var out: org.apache.spark.sql.DataFrame = null
+      val usage = graft.SparkJobs.during(spark) {
+        out = ConnectedComponents.run(spark, edges, vertices, localEdgeThreshold = th)
+      }
+      (out.collect().map(r => r.getString(0) -> r.getString(1)).toSeq.sorted, usage)
+    }
+    val (local, localUsage) = labels(8L) // cap 4: the 4 raw rows fit
+    val (loop, loopUsage) = labels(7L) // cap 3: the distributed loop
+    assert(localUsage === graft.SparkJobs.Usage(jobs = 1, shuffleWriteBytes = 0L))
+    assert(loopUsage.jobs > 1 && loopUsage.shuffleWriteBytes > 0L)
+    assert(local === loop)
+    assert(local.toMap === Map("a" -> "a", "b" -> "a", "c" -> "a",
+      "x" -> "x", "y" -> "x", "z" -> "z"))
+  }
+
+  test("connected components: the bounded collect reads at most cap + 1 rows") {
+    import spark.implicits._
+    val pulled = spark.sparkContext.longAccumulator("rows pulled")
+    val tap = udf { (s: String) => pulled.add(1L); s }.asNondeterministic()
+    val rows = spark.sparkContext.parallelize((0 until 100).map(i => (s"v$i", s"w$i")), 1)
+      .toDF("a", "b").select(tap(col("a")).as("a"), col("b"))
+    assert(ConnectedComponents.collectAtMost[(String, String)](rows, 4).isEmpty)
+    assert(pulled.value === 5L)
+    assert(ConnectedComponents.collectAtMost[(String, String)](rows, 100)
+      .map(_.length) === Some(100))
+  }
+
   test("degenerate identical-signature run: linear chain pairs, no quadratic blowup (skew guard)") {
     import spark.implicits._
     val cfg = DedupConfig(sortedWindow = 8, hotBucketThreshold = 5)
