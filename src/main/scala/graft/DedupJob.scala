@@ -30,8 +30,9 @@ object DedupJob {
       else Dedup.signatures(images, cfg))
     // persist the band table range-partitioned + sorted on the bucket key —
     // the reference's ordered index layout (T1, simhashsearchindex.hpp:98-99)
-    // as a columnar table: bucket probes become partition-pruned scans and
-    // the sorted-neighbor pass reads presorted runs. EXACT keys only: under
+    // as a columnar table: QueryJob's pushed bucket predicate can skip row
+    // groups by their (band_id, band_key) statistics, and the sorted-neighbor
+    // pass reads presorted runs. EXACT keys only: under
     // a multi-probe config (cfg.bandProbes > 0) the probe rows are generated
     // transiently into the candidate pass below — never persisted, so the
     // stored index keeps the reduced-band volume that is the probes' point.

@@ -40,6 +40,15 @@ import graft.pipeline.{Dedup, DedupConfig}
   *    carry the `margins` column (`Dedup.signaturesWithMargins`) — probing
   *    without margins fails fast rather than probing random bits.
   *
+  * A batch of at most `SimIndex.smallBatchRows` queries (2 × the session's
+  * default parallelism) is served eagerly in 2 Spark jobs: raw rows are
+  * featurized in their own scan partitions and collected, and the index
+  * rows under their probe keys are read with one pushed predicate and
+  * collected (`SimIndex.queryTopN`); the result is a local DataFrame.
+  * Larger batches are spread across the session's tasks and served lazily
+  * by the broadcast-join plan, as is a small batch whose index hits exceed
+  * the broadcast budget.
+  *
   * Results land in <outDir> as parquet ordered by (query_id, rank); the
   * strongest matches are echoed to stdout like the tool's report lines.
   */
@@ -62,28 +71,34 @@ object QueryJob {
         "— run graft.DedupJob over the corpus first (the index is reopened, " +
         "never rebuilt here)"))
       .withColumnRenamed("image_id", "id")
-    val qSigs =
+    // (query_id, sim_hi, sim_lo[, margins]); raw image rows are featurized
+    // where they lie for the small path and spread first for the join plan
+    val withMargins = extraProbes > 0
+    def querySigs(spread: Boolean): DataFrame =
       if (queries.columns.contains("sim_hi")) {
-        require(extraProbes == 0 || queries.columns.contains("margins"),
+        require(!withMargins || queries.columns.contains("margins"),
           s"probes=$extraProbes needs fold margins, but the pre-computed " +
             "signature queries carry no `margins` column — featurize with " +
             "Dedup.signaturesWithMargins, or pass raw image rows")
         val idCol = if (queries.columns.contains("query_id")) "query_id"
           else if (queries.columns.contains("image_id")) "image_id" else "id"
         val base = Seq(col(idCol).as("query_id"), col("sim_hi"), col("sim_lo"))
-        queries.select((if (extraProbes > 0) base :+ col("margins")
+        queries.select((if (withMargins) base :+ col("margins")
           else base): _*)
       } else {
         val sigs =
-          if (extraProbes > 0) Dedup.signaturesWithMargins(queries, cfg)
+          if (!spread) Dedup.featurized(queries, cfg, withMargins)
+          else if (withMargins) Dedup.signaturesWithMargins(queries, cfg)
           else Dedup.signatures(queries, cfg)
         val base = Seq(col("image_id").as("query_id"),
           col("sim_hi"), col("sim_lo"))
-        sigs.select((if (extraProbes > 0) base :+ col("margins")
+        sigs.select((if (withMargins) base :+ col("margins")
           else base): _*)
       }
-    val topn =
-      SimIndex.queryTopN(index, qSigs, topN, minSimilarity, cfg, extraProbes)
+    val topn = SimIndex.localTopN(index, querySigs(spread = false), topN,
+        minSimilarity, cfg, extraProbes)
+      .getOrElse(SimIndex.joinTopN(index, querySigs(spread = true), topN,
+        minSimilarity, cfg, extraProbes))
     metadataTxt match {
       case Some(m) =>
         SimIndex.enrichTopN(topn,

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import graft.core.CodePointOrder
 
 /** Connected components over a pair table via iterative DataFrame self-joins
   * (min-label propagation), the explicit clustering step the north rule adds
@@ -28,8 +29,8 @@ import org.apache.spark.sql.types.LongType
   *    previous iteration (a shuffle per iteration);
   *  - `localCheckpoint` after every round truncates lineage so the plan does
   *    not grow exponentially (the classic iterative-join failure mode).
-  * Labels are the vertex keys themselves (min in the key type's order:
-  * lexicographic for strings, numeric for longs), so the result is
+  * Labels are the vertex keys themselves (min in the key type's Spark order:
+  * code-point order for strings, numeric for longs), so the result is
   * deterministic and partitioning-independent. The operator is generic
   * over the key column type — every distributed step is min/least/equi-join
   * algebra — with a dedicated driver-local union-find kernel per key shape
@@ -44,16 +45,20 @@ object ConnectedComponents {
     * capped at 16M edges (the cap binds only above ~14 GB of driver heap;
     * below that the heap/4 term governs).
     *
-    * What the local path actually retains is measured per RAW row
-    * (UnionFindProbe, 36-char ids, forced-GC diff of the collected tuple
-    * array plus the label array the kernel returns): ~224 B per row for
-    * dedup-shaped clusters (1.25 ids per row) and 245 B per row in the
-    * worst case, a matching whose every row brings two fresh ids (122 MB
-    * at 0.5M rows, 245 MB at 1M; the tuple array is ~3/4 of it). The
-    * collect stops at ⌊threshold/2⌋ + 1 raw rows, so the worst case
-    * retains ~(threshold/2) × 245 B ≈ 0.54 × the heap/4 budget — a raw row
-    * is at most two symmetrized edges, and the kernel, which runs only on
-    * a collect within the cap, interns at most `threshold` ids.
+    * What the local path needs is measured per RAW row (UnionFindProbe,
+    * 36-char ids, 1 GB heap): the collected tuple array retains ~189 B per
+    * row, and the kernel's transient peak on top of it (intern map,
+    * `names`, `parent`/`rank`, `minOf` and the label array, bisected with a
+    * heap ballast) adds ~141 B per row for dedup-shaped clusters (1.25 ids
+    * per row: ~330 B per row in all) and 250–260 B per row in the worst
+    * case, a matching whose every row brings two fresh ids (439–448 B per
+    * row in all; 440 MB at 1M rows). The collect stops at ⌊threshold/2⌋ + 1
+    * raw rows, so the worst-case peak is ~(threshold/2) × 448 B ≈ 1.0 × the
+    * heap/4 budget — at the budget, not over it, so the default is kept. A
+    * raw row is at most two symmetrized edges, and the kernel, which runs
+    * only on a collect within the cap, interns at most `threshold` ids.
+    * Spark's own decode buffers during the collect are not in these
+    * figures.
     *
     * The cap was 2M through round 4, tuned for a small driver: the
     * round-5 735k-image scaling run crossed it at 2.5M edges, fell into
@@ -193,8 +198,9 @@ object ConnectedComponents {
     graft.core.Checkpoints.release(df)
 
   /** The driver-side kernel, separated so UnionFindProbe can measure its
-    * real heap retention (see `MeasuredBytesPerEdge`): classic union-find
-    * with path compression + union by rank, then min id per root — exactly
+    * heap (see `MeasuredBytesPerEdge`): classic union-find with path
+    * compression + union by rank, then min id per root in Spark's string
+    * order ([[graft.core.CodePointOrder]], not Java's UTF-16 `<`) — exactly
     * the min-label fixpoint the loop computes. */
   private[graft] def labelsOf(e: Array[(String, String)]): Array[(String, String)] = {
     val index = new java.util.HashMap[String, Integer]()
@@ -230,7 +236,7 @@ object ConnectedComponents {
     names.indices.foreach { i =>
       val r = find(i)
       val cur = minOf.get(r)
-      if (cur == null || names(i) < cur) minOf.put(r, names(i))
+      if (cur == null || CodePointOrder.lt(names(i), cur)) minOf.put(r, names(i))
     }
     Array.tabulate(names.length)(i => (names(i), minOf.get(find(i))))
   }

@@ -92,7 +92,7 @@ object Dedup {
     * (SURVEY.md §2.4 A1): a scalar UDF inside a projection, no shuffle.
     * Column pruning keeps `bytes` out of every downstream stage. */
   def signatures(images: DataFrame, cfg: DedupConfig): DataFrame =
-    signaturesImpl(images, cfg, withMargins = false)
+    featurized(spread(images), cfg, withMargins = false)
 
   /** [[signatures]] plus the fold's 128-entry margin column — the
     * multi-probe flip-priority signal, computed in the SAME decode pass
@@ -100,9 +100,12 @@ object Dedup {
     * Margins are transient by contract: consumers drop the column before
     * any persist/shuffle that does not need it. */
   def signaturesWithMargins(images: DataFrame, cfg: DedupConfig): DataFrame =
-    signaturesImpl(images, cfg, withMargins = true)
+    featurized(spread(images), cfg, withMargins = true)
 
-  private def signaturesImpl(images: DataFrame, cfg: DedupConfig,
+  /** The featurize projection of [[signatures]] (with `margins` when
+    * `withMargins`), run where the rows lie: no spread. For batches too
+    * small to fill the session's tasks (QueryJob's small serve path). */
+  private[graft] def featurized(images: DataFrame, cfg: DedupConfig,
       withMargins: Boolean): DataFrame = {
     val fz = cfg.featurize
     val sigUdf =
@@ -111,24 +114,7 @@ object Dedup {
           ImageFeaturizer.signatureWithMargins(bytes, caption, fz))
       else udf((bytes: Array[Byte], caption: String) =>
         ImageFeaturizer.signature(bytes, caption, fz))
-    // decode is CPU-bound per ROW, but scan splits are sized by BYTES
-    // (spark.sql.files.maxPartitionBytes): a few hundred MB of compressed
-    // images arrive as a handful of splits and starve the executors. Fan a
-    // genuinely-starved scan out to the session's parallelism before
-    // decoding — but never reshuffle the (heavy) image bytes when the scan
-    // already covers the cores. For checkpointed inputs (the streaming /
-    // cascade callers) the partition count is read off the existing RDD —
-    // the `images.rdd` probe re-planned the whole upstream query per call.
-    val target = images.sparkSession.sparkContext.defaultParallelism
-    val scanParts = images.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.getNumPartitions
-      case _ => images.rdd.getNumPartitions
-    }
-    val spread =
-      if (scanParts < target) images.repartition(target * 2)
-      else images
-    val base = spread
+    val base = images
       .select(col("image_id"), captionNormCol(col("caption")).as("caption_norm"),
         sigUdf(col("bytes"), col("caption")).as("sig"))
     val cols = Seq(col("image_id"), col("caption_norm"),
@@ -136,6 +122,24 @@ object Dedup {
       col("sig.minhash").as("minhash")) ++
       (if (withMargins) Seq(col("sig.margins").as("margins")) else Nil)
     base.select(cols: _*)
+  }
+
+  /** Decode is CPU-bound per ROW, but scan splits are sized by BYTES
+    * (spark.sql.files.maxPartitionBytes): a few hundred MB of compressed
+    * images arrive as a handful of splits and starve the executors. Fan a
+    * genuinely-starved scan out to twice the session's parallelism before
+    * decoding — but never reshuffle the (heavy) image bytes when the scan
+    * already covers the cores. For checkpointed inputs (the streaming /
+    * cascade callers) the partition count is read off the existing RDD —
+    * the `images.rdd` probe re-planned the whole upstream query per call. */
+  private def spread(images: DataFrame): DataFrame = {
+    val target = images.sparkSession.sparkContext.defaultParallelism
+    val scanParts = images.queryExecution.logical match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.getNumPartitions
+      case _ => images.rdd.getNumPartitions
+    }
+    if (scanParts < target) images.repartition(target * 2) else images
   }
 
   /** Stage 2 — LSH banding: explode each signature into one row per band,

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import graft.images.SyntheticCorpus
+import graft.index.SimIndex
 import graft.pipeline.ConnectedComponents
 
 /** Spark job budgets of the shipped surfaces. Fixed per-job costs are most
@@ -33,7 +34,26 @@ class JobBudgetSpec extends AnyFunSuite {
     val resumed = SparkJobs.during(spark)(DedupJob.run(spark, images, work)).jobs
     val query = SparkJobs.during(spark)(
       QueryJob.run(spark, work, queries, topN = 3).collect()).jobs
-    assert((fresh, resumed, query) === ((29, 12, 5)),
+    assert((fresh, resumed, query) === ((29, 12, 2)),
       "(DedupJob fresh, DedupJob resumed, QueryJob)")
+  }
+
+  test("SimIndex.queryTopN: a small batch in two jobs; one row over the cap takes the join plan") {
+    import spark.implicits._
+    val sigs = (0 until 40).map { i =>
+      val h = SyntheticCorpus.mix64(i.toLong)
+      (s"rec_$i", h, SyntheticCorpus.mix64(h))
+    }
+    val index = SimIndex.build(sigs.toDF("id", "sim_hi", "sim_lo")).localCheckpoint()
+    val cap = SimIndex.smallBatchRows(spark)
+    // RDD-backed, so each collect is a real job
+    def batch(rows: Int) = spark.sparkContext.parallelize(sigs.take(rows), 2)
+      .toDF("query_id", "sim_hi", "sim_lo")
+    def jobs(df: => org.apache.spark.sql.DataFrame) = SparkJobs.during(spark)(df.collect()).jobs
+    assert(jobs(SimIndex.queryTopN(index, batch(cap), 3, 0.8)) === 2)
+    // over the cap: the bounded collect that finds it out, then the join plan
+    val joinJobs = jobs(SimIndex.joinTopN(index, batch(cap + 1), 3, 0.8))
+    assert(jobs(SimIndex.queryTopN(index, batch(cap + 1), 3, 0.8)) === 1 + joinJobs)
+    assert(joinJobs > 2)
   }
 }

@@ -1,9 +1,13 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.images.SyntheticCorpus
+import graft.index.SimIndex
+import graft.io.ParquetTableIO
 import graft.pipeline.{Dedup, DedupConfig}
 
 /** End-to-end `matchfunctionsfromindex` workflow (QueryJob): DedupJob builds
@@ -159,5 +163,38 @@ class QueryJobSpec extends AnyFunSuite {
     val hits = QueryJob.run(spark, s"$root/work", images, topN = 1, cfg = cfg)
     assert(hits.filter(col("rank") === 1)
       .filter(col("similarity") === 128).count() === images.count())
+  }
+
+  test("small batch: same rows and schema as the join plan (raw rows, pre-computed signatures, probes)") {
+    val root = Files.createTempDirectory("graft-queryjob-small").toString
+    val (images0, _) = SyntheticCorpus.generate(spark,
+      nGroups = 8, variantsPerGroup = 2, nDistractors = 10)
+    val images = images0.localCheckpoint()
+    val cfg = DedupConfig(nBands = 8)
+    DedupJob.run(spark, images, s"$root/work", cfg)
+    val index = new ParquetTableIO(s"$root/work").readStage(spark, "bands",
+      cfg.stageHash).get.withColumnRenamed("image_id", "id")
+    val batch = images.orderBy("image_id").limit(SimIndex.smallBatchRows(spark))
+      .localCheckpoint()
+    def same(got: DataFrame, want: DataFrame): Unit = {
+      // the small path answered: eagerly, as a local relation
+      assert(got.queryExecution.logical.isInstanceOf[LocalRelation])
+      assert(got.schema === want.schema)
+      val rows = got.collect().toSeq.sortBy(_.mkString("|"))
+      assert(rows.nonEmpty)
+      assert(rows === want.collect().toSeq.sortBy(_.mkString("|")))
+    }
+    for (probes <- Seq(0, 3)) {
+      val base = Seq(col("image_id").as("query_id"), col("sim_hi"), col("sim_lo"))
+      val sigs =
+        if (probes > 0) Dedup.signaturesWithMargins(batch, cfg)
+          .select(base :+ col("margins"): _*)
+        else Dedup.signatures(batch, cfg).select(base: _*)
+      val want = SimIndex.joinTopN(index, sigs, 3, 0.8, cfg, probes)
+      same(QueryJob.run(spark, s"$root/work", batch, topN = 3, cfg = cfg,
+        probes = probes), want)
+      same(QueryJob.run(spark, s"$root/work", sigs, topN = 3, cfg = cfg,
+        probes = probes), want)
+    }
   }
 }

@@ -240,13 +240,17 @@ class DedupPipelineSpec extends AnyFunSuite {
   test("connected components: raw pairs (duplicates, both directions, self-loops) — local labels = loop labels, string and long keys") {
     import spark.implicits._
     // f and g appear only in edges, z only in vertices; g and c carry
-    // self-loops; (a, b) and (h, i) come duplicated and in both directions
+    // self-loops; (a, b) and (h, i) come duplicated and in both directions.
+    // The last pair's ids order one way by code point (Spark's order: U+FF21
+    // first) and the other by UTF-16 code unit (the surrogate pair first)
+    val (fw, emoji) = ("\uFF21_fullwidth", "\uD83D\uDE00_emoji")
     val strPairs = Seq(("b", "a"), ("a", "b"), ("a", "b"), ("c", "c"),
       ("c", "d"), ("d", "c"), ("e", "f"), ("g", "g"), ("h", "i"), ("i", "h"),
-      ("h", "i"))
+      ("h", "i"), (fw, emoji))
     val strIds = Seq("a", "b", "c", "d", "e", "h", "z")
     val strExpect = Map("a" -> "a", "b" -> "a", "c" -> "c", "d" -> "c",
-      "e" -> "e", "f" -> "e", "g" -> "g", "h" -> "h", "i" -> "h", "z" -> "z")
+      "e" -> "e", "f" -> "e", "g" -> "g", "h" -> "h", "i" -> "h", "z" -> "z",
+      fw -> fw, emoji -> fw)
     def strLabels(th: Long) = ConnectedComponents.run(spark,
         strPairs.toDF("a", "b"), strIds.toDF("id"), localEdgeThreshold = th)
       .collect().map(r => r.getString(0) -> r.getString(1)).toSeq.sorted
@@ -256,7 +260,8 @@ class DedupPipelineSpec extends AnyFunSuite {
 
     // the same graph on mixed-sign long keys: numeric, not text, order
     val code = Map("a" -> -3L, "b" -> -7L, "c" -> 5L, "d" -> -1L, "e" -> 10L,
-      "f" -> 2L, "g" -> 0L, "h" -> 8L, "i" -> 9L, "z" -> -20L)
+      "f" -> 2L, "g" -> 0L, "h" -> 8L, "i" -> 9L, "z" -> -20L, fw -> 31L,
+      emoji -> 30L)
     val longPairs = strPairs.map { case (x, y) => (code(x), code(y)) }
     def longLabels(th: Long) = ConnectedComponents.run(spark,
         longPairs.toDF("a", "b"), strIds.map(code).toDF("id"),
@@ -265,7 +270,7 @@ class DedupPipelineSpec extends AnyFunSuite {
     val longLoop = longLabels(0L)
     assert(longLoop.toMap === Map(-3L -> -7L, -7L -> -7L, 5L -> -1L,
       -1L -> -1L, 10L -> 2L, 2L -> 2L, 0L -> 0L, 8L -> 8L, 9L -> 8L,
-      -20L -> -20L))
+      -20L -> -20L, 31L -> 30L, 30L -> 30L))
     assert(longLoop.size === code.size)
     assert(longLabels(Long.MaxValue) === longLoop)
   }
