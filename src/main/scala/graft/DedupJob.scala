@@ -25,9 +25,7 @@ object DedupJob {
     val io = new ParquetTableIO(workDir)
     val stages = new StageRunner(io, spark, cfgHash)
 
-    val sigs = stages.stage("signatures")(
-      if (cfg.bandProbes > 0) Dedup.signaturesWithMargins(images, cfg)
-      else Dedup.signatures(images, cfg))
+    val sigs = stages.stage("signatures")(Dedup.signaturesFor(images, cfg))
     // persist the band table range-partitioned + sorted on the bucket key —
     // the reference's ordered index layout (T1, simhashsearchindex.hpp:98-99)
     // as a columnar table: QueryJob's pushed bucket predicate can skip row
@@ -40,10 +38,8 @@ object DedupJob {
       Dedup.bands(sigs, cfg)
         .repartitionByRange(col("band_id"), col("band_key"), col("sort_hi"))
         .sortWithinPartitions("band_id", "band_key", "sort_hi", "sort_lo"))
-    val candInput =
-      if (cfg.bandProbes > 0) bands.unionByName(Dedup.probeBands(sigs, cfg))
-      else bands
-    val cands = stages.stage("candidates")(Dedup.candidates(candInput, cfg))
+    val cands = stages.stage("candidates")(
+      Dedup.candidates(Dedup.candidateBands(sigs, cfg, Some(bands)), cfg))
     val pairs = stages.stage("pairs")(
       Dedup.verified(cands, sigs, cfg)
         .union(Dedup.substringPairs(sigs, cfg)).distinct())

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.core.Checkpoints.ckpt
 import graft.ops.{DedupOps, EmbeddingOps, TextOps, TieredDedup}
 import graft.pipeline.{Dedup, DedupConfig}
 import graft.images.SyntheticCorpus
@@ -215,16 +216,9 @@ object SparkEntry {
     "q23_img_clusters" -> ((s, _) => {
       val cfg = DedupConfig()
       val (images, _) = OracleDump.sharedCorpus(s, 40, 3, 30)
-      val sigs = Dedup.signatures(images, cfg).localCheckpoint()
-      // candidate and substring passes both depend only on sigs — run the
-      // two materializations as concurrent jobs (guide §2.6); the unioned
-      // pair set is unchanged
-      val (cands, ssp) = graft.core.Checkpoints.par2(
-        () => Dedup.candidates(Dedup.bands(sigs, cfg), cfg).localCheckpoint(),
-        () => Dedup.substringPairs(sigs, cfg).localCheckpoint())
+      val accepted = Dedup.acceptedPairs(images, cfg)
       val (pairs, _) = graft.core.Checkpoints.par2(
-        () => OracleDump.dump("q23_pairs",
-          Dedup.verified(cands, sigs, cfg).union(ssp).distinct()),
+        () => OracleDump.dump("q23_pairs", accepted.distinct()),
         () => OracleDump.dump("q23_ids", images.select("image_id")))
       Dedup.clusters(images, pairs).orderBy("image_id")
     }),
@@ -360,10 +354,9 @@ object SparkEntry {
       val ids = SimHashTrainer.featureIdTable(feats)
       val r29 = graft.core.Checkpoints.parallelRun[Any](Seq(
         () => SimHashTrainer.collectHashes(ids),
-        () => SimHashTrainer.featureVectors(feats, ids).localCheckpoint(),
-        () => DedupOps.minhashLshDedup(docs, 0.5)
-          .select(col("doc_a").as("a"), col("doc_b").as("b"))
-          .localCheckpoint()))
+        () => ckpt(SimHashTrainer.featureVectors(feats, ids)),
+        () => ckpt(DedupOps.minhashLshDedup(docs, 0.5)
+          .select(col("doc_a").as("a"), col("doc_b").as("b")))))
       val hashes = r29(0).asInstanceOf[Array[(Long, Long)]]
       val byDoc = r29(1).asInstanceOf[DataFrame]
       val attract = r29(2).asInstanceOf[DataFrame]
@@ -551,8 +544,8 @@ object SparkEntry {
           () => OracleDump.dump("q40_index",
             graft.streaming.StreamingDedup.indexFromState(s, stateDir)
               .select("band_id", "image_id")),
-          () => graft.streaming.StreamingDedup
-            .clustersFromState(s, stateDir).localCheckpoint()))
+          () => ckpt(graft.streaming.StreamingDedup
+            .clustersFromState(s, stateDir))))
       val la = clusters.select(col("image_id").as("a"), col("cluster_id").as("la"))
       val lb = clusters.select(col("image_id").as("b"), col("cluster_id").as("lb"))
       val hit = truthPairs.join(la, "a").join(lb, "b")
@@ -585,7 +578,7 @@ object SparkEntry {
       // keeping the original as the expected canonical
       val copies = images.filter(pmod(crc32(col("image_id")), lit(5)) === 0)
         .withColumn("image_id", concat(col("image_id"), lit("~c")))
-      val all = images.union(copies).localCheckpoint()
+      val all = ckpt(images.union(copies))
       val normUdf = udf((c: String) =>
         graft.featurize.ImageFeaturizer.normalizeCaption(c))
       // the evidence dump over the input and the cascade itself are
@@ -685,13 +678,9 @@ object SparkEntry {
       // bucket→split mapping end-to-end.
       val cfg = DedupConfig()
       val (images, _) = OracleDump.sharedCorpus(s, 40, 3, 30)
-      val sigs = Dedup.signatures(images, cfg).localCheckpoint()
-      val (cands, ssp) = graft.core.Checkpoints.par2(
-        () => Dedup.candidates(Dedup.bands(sigs, cfg), cfg).localCheckpoint(),
-        () => Dedup.substringPairs(sigs, cfg).localCheckpoint())
+      val accepted = Dedup.acceptedPairs(images, cfg)
       val (pairs, _) = graft.core.Checkpoints.par2(
-        () => OracleDump.dump("q45_pairs",
-          Dedup.verified(cands, sigs, cfg).union(ssp).distinct()),
+        () => OracleDump.dump("q45_pairs", accepted.distinct()),
         () => OracleDump.dump("q45_ids", images.select("image_id")))
       graft.ops.MixOps.clusterSplit(Dedup.clusters(images, pairs))
         .orderBy("image_id")
@@ -719,13 +708,9 @@ object SparkEntry {
       // aggregation layers from the dumped pair/size evidence.
       val cfg = DedupConfig()
       val (images, _) = OracleDump.sharedCorpus(s, 40, 3, 30)
-      val sigs = Dedup.signatures(images, cfg).localCheckpoint()
-      val (cands, ssp) = graft.core.Checkpoints.par2(
-        () => Dedup.candidates(Dedup.bands(sigs, cfg), cfg).localCheckpoint(),
-        () => Dedup.substringPairs(sigs, cfg).localCheckpoint())
+      val accepted = Dedup.acceptedPairs(images, cfg)
       val (pairs, sizes) = graft.core.Checkpoints.par2(
-        () => OracleDump.dump("q47_pairs",
-          Dedup.verified(cands, sigs, cfg).union(ssp).distinct()),
+        () => OracleDump.dump("q47_pairs", accepted.distinct()),
         () => OracleDump.dump("q47_sizes",
           images.select(col("image_id"),
             length(col("bytes")).cast("long").as("n_bytes"))))
@@ -744,13 +729,9 @@ object SparkEntry {
       // hash.
       val cfg = DedupConfig()
       val (images, _) = OracleDump.sharedCorpus(s, 40, 3, 30)
-      val sigs = Dedup.signatures(images, cfg).localCheckpoint()
-      val (cands, ssp) = graft.core.Checkpoints.par2(
-        () => Dedup.candidates(Dedup.bands(sigs, cfg), cfg).localCheckpoint(),
-        () => Dedup.substringPairs(sigs, cfg).localCheckpoint())
+      val accepted = Dedup.acceptedPairs(images, cfg)
       val (pairs, caps) = graft.core.Checkpoints.par2(
-        () => OracleDump.dump("q48_pairs",
-          Dedup.verified(cands, sigs, cfg).union(ssp).distinct()),
+        () => OracleDump.dump("q48_pairs", accepted.distinct()),
         () => OracleDump.dump("q48_caps",
           images.select(col("image_id").as("doc_id"),
             col("caption").as("text"))))
@@ -783,15 +764,14 @@ object SparkEntry {
       // caption-paraphrase case (v=4) — the (40,3,·) corpus has none.
       val cfg = DedupConfig()
       val (images, _) = OracleDump.sharedCorpus(s, 30, 5, 20)
-      val sigs = Dedup.signatures(images, cfg).localCheckpoint()
+      val sigs = ckpt(Dedup.signatures(images, cfg))
       val normUdf = udf((c: String) =>
         graft.featurize.ImageFeaturizer.normalizeCaption(c))
       // the candidate→pair chain and the caption normalization dump are
       // independent — concurrent jobs (guide §2.6)
       val (pairs, caps) = graft.core.Checkpoints.par2(
         () => {
-          val cands =
-            Dedup.candidates(Dedup.bands(sigs, cfg), cfg).localCheckpoint()
+          val cands = ckpt(Dedup.candidates(Dedup.bands(sigs, cfg), cfg))
           OracleDump.dump("q49_pairs", Dedup.verifiedHamming(cands, cfg))
         },
         () => OracleDump.dump("q49_caps", images.select(col("image_id"),
@@ -811,15 +791,14 @@ object SparkEntry {
       val spam = images.filter(pmod(crc32(col("image_id")), lit(7)) === 0)
         .withColumn("image_id", concat(col("image_id"), lit("~s")))
         .withColumn("caption", lit("Stock photo — buy now, best price!"))
-      val all = images.union(spam).localCheckpoint()
-      val sigs = Dedup.signatures(all, cfg).localCheckpoint()
+      val all = ckpt(images.union(spam))
+      val sigs = ckpt(Dedup.signatures(all, cfg))
       val normUdf = udf((c: String) =>
         graft.featurize.ImageFeaturizer.normalizeCaption(c))
       // candidate→pair chain ∥ id dump ∥ caption dump (guide §2.6)
       val Seq(pairs, _, caps) = graft.core.Checkpoints.parallelRun[DataFrame](Seq(
         () => {
-          val cands =
-            Dedup.candidates(Dedup.bands(sigs, cfg), cfg).localCheckpoint()
+          val cands = ckpt(Dedup.candidates(Dedup.bands(sigs, cfg), cfg))
           OracleDump.dump("q50_pairs", Dedup.verifiedHamming(cands, cfg))
         },
         () => OracleDump.dump("q50_ids", all.select("image_id")),

@@ -35,7 +35,6 @@ final case class DedupConfig(
     substringWindow: Int = 24,
     sortedWindow: Int = 8,
     hotBucketThreshold: Int = 100000,
-    rangeSaltedCandidates: Boolean = false,
     featurize: FeaturizeConfig = FeaturizeConfig()) {
   require(minhashBands * minhashRows <= featurize.minhashK,
     "minhash banding exceeds sketch size")
@@ -93,6 +92,13 @@ object Dedup {
     * Column pruning keeps `bytes` out of every downstream stage. */
   def signatures(images: DataFrame, cfg: DedupConfig): DataFrame =
     featurized(spread(images), cfg, withMargins = false)
+
+  /** The signatures a self-dedup run needs under `cfg`: with margins when
+    * it probes (`cfg.bandProbes > 0`, the input of [[probeBands]]), plain
+    * otherwise. */
+  def signaturesFor(images: DataFrame, cfg: DedupConfig): DataFrame =
+    if (cfg.bandProbes > 0) signaturesWithMargins(images, cfg)
+    else signatures(images, cfg)
 
   /** [[signatures]] plus the fold's 128-entry margin column — the
     * multi-probe flip-priority signal, computed in the SAME decode pass
@@ -255,11 +261,7 @@ object Dedup {
 
   private def unsignedCol(c: Column): Column = c.bitwiseXOR(lit(Long.MinValue))
 
-  def candidates(bandsDf: DataFrame, cfg: DedupConfig): DataFrame =
-    if (cfg.rangeSaltedCandidates) candidatesSalted(bandsDf, cfg)
-    else candidatesHashed(bandsDf, cfg)
-
-  /** Default path: hash-partition by bucket, sort, one sliding pass.
+  /** Hash-partition by bucket, sort, one sliding pass.
     *
     * Sliding pass as ONE sorted mapPartitions, not a WindowExec with
     * `sortedWindow` lead() struct columns + array + explode: that plan
@@ -271,7 +273,7 @@ object Dedup {
     * bucket wholly into one partition, rows sort by (bucket, unsigned band
     * value, id), and each row pairs with its next <=W in-bucket neighbors
     * — so output depends only on bucket contents, never on partitioning. */
-  def candidatesHashed(bandsDf: DataFrame, cfg: DedupConfig): DataFrame = {
+  def candidates(bandsDf: DataFrame, cfg: DedupConfig): DataFrame = {
     import bandsDf.sparkSession.implicits._
     val w = cfg.sortedWindow
     val maxH = cfg.maxHamming
@@ -299,12 +301,13 @@ object Dedup {
     * (one cheap extra scan of the narrow band tuples, collected — W × P
     * rows total) are broadcast and PREPENDED to the next partition, priming
     * its ring buffer without re-emitting (skip = overlap length). The
-    * emitted pair set is therefore exactly `candidatesHashed`'s — asserted
+    * emitted pair set is therefore exactly that of [[candidates]] — asserted
     * by DedupPipelineSpec on planted and degenerate corpora — and output
     * no longer depends on where the range sampler cut, so run-to-run
     * boundary variation cannot change results. Extra cost: one cache +
     * tail-collect pass; worth it only when bucketStats reports hot
-    * buckets, hence opt-in via DedupConfig.rangeSaltedCandidates. */
+    * buckets, so no pipeline calls it yet. Returns an eagerly checkpointed
+    * frame (its cached RDD and tails broadcast are released on exit). */
   def candidatesSalted(bandsDf: DataFrame, cfg: DedupConfig,
       numPartitions: Option[Int] = None): DataFrame = {
     import bandsDf.sparkSession.implicits._
@@ -362,14 +365,6 @@ object Dedup {
     } finally rdd.unpersist(false)
   }
 
-  /** Candidates, materialized: the salted path already returns an eagerly
-    * checkpointed frame (it must — its cached RDD and tails broadcast are
-    * released on exit), so callers that need a checkpoint must not pay for
-    * a second copy. */
-  def candidatesMaterialized(bandsDf: DataFrame, cfg: DedupConfig): DataFrame =
-    if (cfg.rangeSaltedCandidates) candidatesSalted(bandsDf, cfg)
-    else graft.core.Checkpoints.ckpt(candidatesHashed(bandsDf, cfg))
-
   /** Full-width Hamming distance as a built-in column expression — pure
     * codegen, no UDF (`bit_count` ≥ Spark 3.3; SURVEY.md §1.3). */
   def hamming128Col(aHi: Column, aLo: Column, bHi: Column, bLo: Column): Column =
@@ -415,16 +410,42 @@ object Dedup {
       .withColumnRenamed("id", "image_id")
 
   /** The sorted-neighbor candidate input for a self-dedup batch: the exact
-    * band rows, plus — when `cfg.bandProbes > 0` — every row's TRANSIENT
-    * probe rows ([[probeBands]]), which sort adjacent to the flipped
-    * bucket's true members so a reduced-band config recovers the recall of
-    * a wide one (the batch form of the streaming probe join; `sigs` must
-    * carry `margins` when probing). Probe rows exist only inside this
-    * candidate pass — anything PERSISTED (DedupJob's bands stage, the
-    * streaming index) stays exact-only. */
-  def candidateBands(sigs: DataFrame, cfg: DedupConfig): DataFrame =
-    if (cfg.bandProbes > 0) bands(sigs, cfg).unionByName(probeBands(sigs, cfg))
-    else bands(sigs, cfg)
+    * band rows (`exact`, by default [[bands]] of `sigs`), plus — when
+    * `cfg.bandProbes > 0` — every row's TRANSIENT probe rows
+    * ([[probeBands]]), which sort adjacent to the flipped bucket's true
+    * members so a reduced-band config recovers the recall of a wide one
+    * (the batch form of the streaming probe join; `sigs` must carry
+    * `margins` when probing, see [[signaturesFor]]). Probe rows exist only
+    * inside this candidate pass — anything PERSISTED (DedupJob's bands
+    * stage, the streaming index) stays exact-only. */
+  def candidateBands(sigs: DataFrame, cfg: DedupConfig,
+      exact: Option[DataFrame] = None): DataFrame = {
+    val exactBands = exact.getOrElse(bands(sigs, cfg))
+    if (cfg.bandProbes > 0) exactBands.unionByName(probeBands(sigs, cfg))
+    else exactBands
+  }
+
+  /** Every accepted pair of a self-dedup batch: signatures →
+    * {candidates ∥ substring} → verified ∪ substring, the in-memory form
+    * of the pair pipeline ([[graft.DedupJob]] commits the same stages for
+    * resume). The intermediates go through [[graft.core.Checkpoints.ckpt]],
+    * so a caller's scope releases them. The pairs are NOT distinct: the
+    * local union-find is indifferent to duplicates, and the distributed
+    * loop distincts its symmetrized edge table itself. */
+  def acceptedPairs(images: DataFrame, cfg: DedupConfig): DataFrame = {
+    import graft.core.Checkpoints.{ckpt, par2}
+    val sigs = ckpt(signaturesFor(images, cfg))
+    // checkpoint: `verified` consumes candidates on two branches (Hamming
+    // accept + minhash-jaccard remainder) and Catalyst does not reuse
+    // common subplans across DataFrame branches — without this the whole
+    // band-sort-window DAG executes twice. The substring pass depends only
+    // on the signatures, so it materializes CONCURRENTLY with the candidate
+    // job (guide §2.6) instead of serially inside the consumer's action.
+    val (cands, ssp) = par2(
+      () => ckpt(candidates(candidateBands(sigs, cfg), cfg)),
+      () => ckpt(substringPairs(sigs, cfg)))
+    verified(cands, sigs, cfg).union(ssp)
+  }
 
   /** End-to-end: images → (image_id, cluster_id). Scoped ([[graft.core
     * .Checkpoints]]): the signature/candidate checkpoints are released once
@@ -432,24 +453,7 @@ object Dedup {
     * accumulate block storage. */
   def run(images: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame =
     graft.core.Checkpoints.scoped(images.sparkSession) {
-      val sigs = graft.core.Checkpoints.ckpt(
-        if (cfg.bandProbes > 0) signaturesWithMargins(images, cfg)
-        else signatures(images, cfg))
-      // checkpoint: `verified` consumes candidates on two branches (Hamming
-      // accept + minhash-jaccard remainder) and Catalyst does not reuse
-      // common subplans across DataFrame branches — without this the whole
-      // band-sort-window DAG executes twice. The substring pass depends
-      // only on the signatures, so it materializes CONCURRENTLY with the
-      // candidate job (guide §2.6) instead of serially inside the
-      // clustering action.
-      val (cands, ssp) = graft.core.Checkpoints.par2(
-        () => candidatesMaterialized(candidateBands(sigs, cfg), cfg),
-        () => graft.core.Checkpoints.ckpt(substringPairs(sigs, cfg)))
-      // no .distinct() here: the local union-find is indifferent to
-      // duplicate pairs, and the distributed loop distincts its
-      // symmetrized edge table itself
-      val pairs = verified(cands, sigs, cfg).union(ssp)
-      clusters(images, pairs)
+      clusters(images, acceptedPairs(images, cfg))
     }
 
   /** All predicted duplicate pairs implied by the clustering (for the recall

@@ -98,13 +98,11 @@ object TieredImageDedup {
     val decodable = surv1.filter(col("bytes").isNotNull)
     val nullBytes = surv1.filter(col("bytes").isNull)
       .select(col("image_id"), col("caption"))
-    val sigs = Checkpoints.ckpt(
-      if (cfg.bandProbes > 0) Dedup.signaturesWithMargins(decodable, cfg)
-      else Dedup.signatures(decodable, cfg))
+    val sigs = Checkpoints.ckpt(Dedup.signaturesFor(decodable, cfg))
     // candidateBands honors cfg.bandProbes (transient probe rows into the
     // sorted-neighbor pass; nothing persisted), same as Dedup.run
-    val cands =
-      Dedup.candidatesMaterialized(Dedup.candidateBands(sigs, cfg), cfg)
+    val cands = Checkpoints.ckpt(
+      Dedup.candidates(Dedup.candidateBands(sigs, cfg), cfg))
     val nearPairs = Checkpoints.ckpt(
       Dedup.verified(cands, sigs, cfg).distinct())
     // checkpointed (as in TieredDedup): the label table's singleton leg

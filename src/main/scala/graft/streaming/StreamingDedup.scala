@@ -730,9 +730,8 @@ object StreamingDedup {
     // key bits; the PERSISTED sigs/index tables never see margins or probe
     // rows — probing is query-side only, which is what lets cfg.nBands
     // (the stored band count, the dominant state volume) shrink
-    val sigsAll = graft.core.Checkpoints.ckpt(
-      if (cfg.bandProbes > 0) Dedup.signaturesWithMargins(survivors, cfg)
-      else Dedup.signatures(survivors, cfg))
+    val sigsAll =
+      graft.core.Checkpoints.ckpt(Dedup.signaturesFor(survivors, cfg))
     val sigs =
       if (cfg.bandProbes > 0) sigsAll.drop("margins") else sigsAll
     // the four frames derived from the materialized signatures (band
@@ -824,7 +823,8 @@ object StreamingDedup {
           val relevantOld = if (metrics)
             graft.core.Checkpoints.ckpt(relevantOld0) else relevantOld0
           val relevant = relevantOld.union(probeSet)
-          (relevantOld, idxStats, Dedup.candidatesMaterialized(relevant, cfg))
+          (relevantOld, idxStats,
+            graft.core.Checkpoints.ckpt(Dedup.candidates(relevant, cfg)))
         },
         () => {
           // incremental substring pass: only joins touching a NEW row — new

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import graft.images.SyntheticCorpus
 import graft.index.SimIndex
-import graft.pipeline.ConnectedComponents
+import graft.pipeline.{ConnectedComponents, Dedup}
 
 /** Spark job budgets of the shipped surfaces. Fixed per-job costs are most
   * of a small call, so each count is pinned where it stands: a change that
@@ -36,6 +36,13 @@ class JobBudgetSpec extends AnyFunSuite {
       QueryJob.run(spark, work, queries, topN = 3).collect()).jobs
     assert((fresh, resumed, query) === ((29, 12, 2)),
       "(DedupJob fresh, DedupJob resumed, QueryJob)")
+  }
+
+  test("Dedup.run: pinned job count") {
+    val (generated, _) = SyntheticCorpus.generate(spark,
+      nGroups = 8, variantsPerGroup = 2, nDistractors = 6)
+    val images = generated.localCheckpoint()
+    assert(SparkJobs.during(spark)(Dedup.run(images)).jobs === 13)
   }
 
   test("SimIndex.queryTopN: a small batch in two jobs; one row over the cap takes the join plan") {

@@ -342,7 +342,7 @@ class DedupPipelineSpec extends AnyFunSuite {
     val cfg = DedupConfig()
     val (images, _) = SyntheticCorpus.generate(spark, 25, 3, 25)
     val bands = Dedup.bands(Dedup.signatures(images, cfg), cfg).localCheckpoint()
-    val hashed = pairSet(Dedup.candidatesHashed(bands, cfg))
+    val hashed = pairSet(Dedup.candidates(bands, cfg))
     val salted = pairSet(Dedup.candidatesSalted(bands, cfg, Some(7)))
     assert(hashed.nonEmpty)
     assert(salted === hashed)
@@ -356,7 +356,7 @@ class DedupPipelineSpec extends AnyFunSuite {
     val degSigs = (1 to 120).map(i => (f"id_$i%03d", 0L, 0L, Array.fill(64)(0L)))
       .toDF("image_id", "sim_hi", "sim_lo", "minhash")
     val degBands = Dedup.bands(degSigs, cfg2).localCheckpoint()
-    val degHashed = pairSet(Dedup.candidatesHashed(degBands, cfg2))
+    val degHashed = pairSet(Dedup.candidates(degBands, cfg2))
     val degSalted = pairSet(Dedup.candidatesSalted(degBands, cfg2, Some(16)))
     assert(degSalted === degHashed)
     // and the forced range split really crossed bucket boundaries: fewer
@@ -367,5 +367,31 @@ class DedupPipelineSpec extends AnyFunSuite {
         col("sort_hi"), col("sort_lo"), col("image_id"))
       .groupBy(spark_partition_id()).count().count()
     assert(nParts > 1, "range partitioning did not split the mega-bucket")
+  }
+
+  test("Dedup.run clusters equal DedupJob.run's committed clusters stage, exact and multi-probe") {
+    val (generated, _) = SyntheticCorpus.generate(spark, nGroups = 12,
+      variantsPerGroup = 3, nDistractors = 15)
+    val images = generated.localCheckpoint()
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.select("image_id", "cluster_id").collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+    for (cfg <- Seq(DedupConfig(), DedupConfig(nBands = 8, bandProbes = 3))) {
+      val work = java.nio.file.Files.createTempDirectory("graft-agree")
+        .resolve("work").toString
+      graft.DedupJob.run(spark, images, work, cfg)
+      val inMemory = labels(Dedup.run(images, cfg))
+      val committed = labels(spark.read.parquet(s"$work/clusters/data"))
+      assert(inMemory.size === images.count(), cfg)
+      assert(inMemory === committed, cfg)
+      assert(inMemory.values.toSet.size < inMemory.size, s"$cfg: no cluster formed")
+    }
+  }
+
+  test("stageHash: removing a default-valued field keeps committed stages keyed as before") {
+    // the keys existing DedupJob work dirs (and so QueryJob indexes) are
+    // committed under: a changed value makes every one recompute or fail
+    assert(DedupConfig().stageHash === "efbc56a0")
+    assert(DedupConfig(nBands = 8, bandProbes = 3).stageHash === "7170dd23")
   }
 }
