@@ -1,5 +1,9 @@
 package graft.core
 
+import java.util.concurrent.{Executors, ThreadFactory}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Explicit lifetime management for `localCheckpoint` blocks.
@@ -31,6 +35,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    even result checkpoints never outlive the query that produced them.
   *    The blanket diff-sweep is a DRIVER-MAIN tool only (single-threaded
   *    process that owns the whole session); operators must use scopes.
+  *  - jobs overlap only through [[parallelRun]] / [[par2]]: they carry the
+  *    caller's scope to the bodies, run them on this object's own
+  *    job-submission pool, and drain every body before a failure leaves.
   */
 object Checkpoints {
 
@@ -148,6 +155,26 @@ object Checkpoints {
     finally { releaseIds(spark, scope.snapshotIds); () }
   }
 
+  /** [[parallelRun]]'s job-submission threads: a cached pool of daemon
+    * threads, never shut down. A body holds its thread while its Spark
+    * actions run (Spark waits on a job without `blocking {}`, so a
+    * fork-join pool adds no thread for it) and bodies nest (a [[par2]]
+    * inside a [[parallelRun]] body), so a fixed-width pool (the global one
+    * has one worker per core) serializes the overlap or, nested, waits on
+    * itself. It is not capped: the program's bodies set its width (at most
+    * seven at one level, the table folds); idle threads exit after 60 s. */
+  private lazy val jobPool: ExecutionContext = {
+    val factory = new ThreadFactory {
+      private val n = new AtomicInteger
+      def newThread(r: Runnable): Thread = {
+        val t = new Thread(r, s"graft-parallel-run-${n.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      }
+    }
+    ExecutionContext.fromExecutorService(Executors.newCachedThreadPool(factory))
+  }
+
   /** Run independent materializations CONCURRENTLY inside the calling
     * thread's checkpoint scope (guide §2.6: Spark's scheduler happily runs
     * several jobs at once; serial driver calls leave the tail of each job's
@@ -155,16 +182,28 @@ object Checkpoints {
     * `ckpt` calls made by any body register to the SAME scope as the
     * caller's, so scoped release semantics are identical to running the
     * bodies serially. Bodies must be independent (no body may consume
-    * another's result). */
+    * another's result). Every body runs to its end before this returns or
+    * throws — a failed body never leaves a sibling still submitting jobs
+    * against blocks the caller's scope is about to release — and the first
+    * failure in body order is rethrown. An interrupt of the caller (a
+    * stopped streaming query) is held until the bodies are done, then
+    * restored. */
   def parallelRun[A](bodies: Seq[() => A]): Seq[A] = {
     if (bodies.lengthCompare(1) <= 0) return bodies.map(_())
     val scope = current.value
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(
-      Future.sequence(bodies.map(b =>
-        Future(current.withValue(scope)(b())))), Duration.Inf)
+    // capture every Throwable: a Future never completes on a fatal one
+    // (the drain would hang) and boxes other Errors
+    val runs = bodies.map(b => Future(
+      try Right(current.withValue(scope)(b()))
+      catch { case t: Throwable => Left(t) })(jobPool))
+    var interrupted = false
+    runs.foreach { r =>
+      while (!r.isCompleted)
+        try Await.ready(r, Duration.Inf)
+        catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    runs.map(_.value.get.get.fold(t => throw t, identity))
   }
 
   /** Two-body [[parallelRun]] with heterogeneous result types. */

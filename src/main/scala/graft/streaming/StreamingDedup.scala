@@ -162,12 +162,14 @@ object StreamingDedup {
     * exists, excluding the batch currently being processed. Dirs without a
     * marker (in-flight, torn) and batch dirs subsumed by the base
     * (deferred-delete leftovers, or survivors of a crash between compaction
-    * rename and ledger write) are ignored. */
-  private case class Committed(base: Option[Path], batches: Seq[(Long, Path)])
+    * rename and ledger write) are ignored. `baseId` is the base's id: the
+    * table's floor, at or below which every batch is folded in. */
+  private case class Committed(base: Option[Path], baseId: Option[Long],
+      batches: Seq[(Long, Path)])
 
   private def committedDirs(fs: FileSystem, table: Path,
       excludeBatch: Option[Long]): Committed = {
-    if (!fs.exists(table)) return Committed(None, Nil)
+    if (!fs.exists(table)) return Committed(None, None, Nil)
     val committed = committedBatchIds(fs, commitsDir(table))
     val entries = fs.listStatus(table).toSeq.filter(_.isDirectory)
     val bases = entries.flatMap { st =>
@@ -194,7 +196,7 @@ object StreamingDedup {
         case _ => None
       }
     }.sortBy(_._1)
-    Committed(base.map(_._2), batches)
+    Committed(base.map(_._2), floor, batches)
   }
 
   private def parquetFiles(fs: FileSystem, dir: Path): Long =
@@ -225,8 +227,11 @@ object StreamingDedup {
     }
   }
 
-  private def emptyDf(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(
+  /** `dirs` read as parquet under `schema` (an empty frame for no dirs). */
+  private def readDirs(spark: SparkSession, schema: StructType,
+      dirs: Seq[String]): DataFrame =
+    if (dirs.nonEmpty) spark.read.schema(schema).parquet(dirs: _*)
+    else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** Read a table's committed state, pruned: base partitions restricted to
@@ -241,9 +246,7 @@ object StreamingDedup {
     val c = committedDirs(fs, table, excludeBatch)
     val baseDirs = c.base.toSeq.flatMap(basePartDirs(fs, _, touchedP))
     val dirs = (baseDirs ++ c.batches.map(_._2)).map(_.toString)
-    val df =
-      if (dirs.isEmpty) emptyDf(spark, schema)
-      else spark.read.schema(schema).parquet(dirs: _*)
+    val df = readDirs(spark, schema, dirs)
     val stats =
       if (!wantStats) Zero
       else {
@@ -274,24 +277,14 @@ object StreamingDedup {
   private def partCol(cols: Seq[Column], p: Int): Column =
     pmod(xxhash64(cols: _*), lit(p.toLong)).cast("int")
 
-  /** The distinct state-partition numbers each tagged key frame takes —
-    * the touched-partition sets driving directory pruning, for SEVERAL
-    * tables in ONE Spark job (a per-table job is pure scheduling overhead
-    * on frames this small). Uses `partCol` itself so read- and write-side
-    * partitioning can never diverge. */
-  private def touchedPartitionsMulti(tagged: Seq[(String, DataFrame, Seq[Column])],
-      p: Int): Map[String, Set[Int]] = {
-    val union = tagged.map { case (tag, df, keys) =>
-      df.select(lit(tag).as("t"), partCol(keys, p).as("p"))
-    }.reduce(_.union(_)).distinct().collect()
-    val m = union.groupBy(_.getString(0))
-      .map { case (t, rows) => t -> rows.map(_.getInt(1)).toSet }
-    tagged.map(_._1).map(t => t -> m.getOrElse(t, Set.empty[Int])).toMap
-  }
-
+  /** The distinct state-partition numbers `df`'s keys take — the
+    * touched-partition set driving directory pruning, in one Spark job.
+    * Uses `partCol` itself so read- and write-side partitioning can never
+    * diverge. */
   private def touchedPartitions(df: DataFrame, keys: Seq[Column],
       p: Int): Set[Int] =
-    touchedPartitionsMulti(Seq(("x", df, keys)), p)("x")
+    df.select(partCol(keys, p).as("p")).distinct().collect()
+      .map(_.getInt(0)).toSet
 
   /** `Checkpoints.ckpt` + the frame's distinct state-partition numbers for
     * `keys`, collected as a SIDE EFFECT of the same materialization job via
@@ -322,16 +315,32 @@ object StreamingDedup {
   }
 
   // ---------------------------------------------------------------- stateP
+  private def statePFile(stateDir: Path): Path =
+    new Path(new Path(stateDir, "meta"), "state_p")
+
+  private def resizePendingMarker(stateDir: Path): Path =
+    new Path(new Path(stateDir, "meta"), "resize_pending")
+
+  /** The partition count a `meta/` file holds (`meta/state_p`, or the
+    * target of the `meta/resize_pending` marker), if the file exists. */
+  private def readP(fs: FileSystem, f: Path): Option[Int] =
+    if (!fs.exists(f)) None
+    else {
+      val in = fs.open(f)
+      try Some(scala.io.Source.fromInputStream(in).mkString.trim.toInt)
+      finally in.close()
+    }
+
+  private def writeP(fs: FileSystem, f: Path, p: Int): Unit = {
+    val out = fs.create(f, true)
+    try out.write(s"$p\n".getBytes("UTF-8")) finally out.close()
+  }
+
   /** Persist-or-validate the state partition count. The base `p=` layout is
     * a function of `stateP`; pruning under a different modulus silently
     * skips partitions holding relevant rows, so a mismatch is an error, not
     * a degradation. */
-  private def resizePendingMarker(stateDir: Path): Path =
-    new Path(new Path(stateDir, "meta"), "resize_pending")
-
   private def checkStateP(fs: FileSystem, stateDir: Path, stateP: Int): Unit = {
-    val metaDir = new Path(stateDir, "meta")
-    val f = new Path(metaDir, "state_p")
     // an interrupted offline resize may have rewritten SOME tables' bases
     // under the new modulus while meta/state_p still holds the old one —
     // pruning those bases with old-modulus touched sets would silently
@@ -342,43 +351,34 @@ object StreamingDedup {
         "resize_pending exists): some bases may already use the new " +
         "modulus. Re-run StreamingDedup.resizeStateP (StreamJob `resize` " +
         "mode) to completion before ingesting — it is idempotent.")
-    if (fs.exists(f)) {
-      val in = fs.open(f)
-      val persisted = try scala.io.Source.fromInputStream(in).mkString.trim.toInt
-      finally in.close()
-      require(persisted == stateP,
-        s"stateP mismatch: state at $stateDir was written with " +
-          s"stateP=$persisted but this run uses stateP=$stateP. Probing " +
-          "would silently mis-prune base partitions. Either restart with " +
-          s"stateP=$persisted, or migrate offline with " +
-          "StreamingDedup.resizeStateP (StreamJob `resize` mode): it " +
-          "rewrites every table's base under the new modulus and updates " +
-          "meta/state_p atomically w.r.t. the reader rule.")
-    } else {
-      // adopt this run's stateP only for a FRESH state dir: pre-existing
-      // base/batch dirs without a persisted modulus (state written by a
-      // pre-meta version) were laid out under an unknown stateP, and
-      // adopting blindly would mis-prune exactly like the mismatch above
-      val preexisting = tableSpecs.map(_._1).exists { name =>
-        val t = new Path(stateDir, name)
-        fs.exists(t) && fs.listStatus(t).exists { st =>
-          st.isDirectory && (st.getPath.getName match {
-            case BaseRe(_) => true
-            case BatchRe(_) => true
-            case _ => false
-          })
+    readP(fs, statePFile(stateDir)) match {
+      case Some(persisted) =>
+        require(persisted == stateP,
+          s"stateP mismatch: state at $stateDir was written with " +
+            s"stateP=$persisted but this run uses stateP=$stateP. Probing " +
+            "would silently mis-prune base partitions. Either restart with " +
+            s"stateP=$persisted, or migrate offline with " +
+            "StreamingDedup.resizeStateP (StreamJob `resize` mode): it " +
+            "rewrites every table's base under the new modulus and updates " +
+            "meta/state_p atomically w.r.t. the reader rule.")
+      case None =>
+        // adopt this run's stateP only for a FRESH state dir: pre-existing
+        // base/batch dirs without a persisted modulus (state written by a
+        // pre-meta version) were laid out under an unknown stateP, and
+        // adopting blindly would mis-prune exactly like the mismatch above
+        val preexisting = tableSpecs.map(_._1).exists { name =>
+          val t = new Path(stateDir, name)
+          fs.exists(t) && fs.listStatus(t).exists(st => st.isDirectory &&
+            Seq(BaseRe, BatchRe).exists(_.matches(st.getPath.getName)))
         }
-      }
-      require(!preexisting,
-        s"state at $stateDir has base/batch dirs but no persisted " +
-          "meta/state_p (written by a pre-meta version). Refusing to " +
-          s"adopt stateP=$stateP blindly — if it differs from the value " +
-          "the state was written with, probes would silently mis-prune. " +
-          "Write the ORIGINAL partition count to meta/state_p, then " +
-          "restart (and resize offline if a different value is wanted).")
-      if (!fs.exists(metaDir)) fs.mkdirs(metaDir)
-      val out = fs.create(f, true)
-      try out.write(s"$stateP\n".getBytes("UTF-8")) finally out.close()
+        require(!preexisting,
+          s"state at $stateDir has base/batch dirs but no persisted " +
+            "meta/state_p (written by a pre-meta version). Refusing to " +
+            s"adopt stateP=$stateP blindly — if it differs from the value " +
+            "the state was written with, probes would silently mis-prune. " +
+            "Write the ORIGINAL partition count to meta/state_p, then " +
+            "restart (and resize offline if a different value is wanted).")
+        writeP(fs, statePFile(stateDir), stateP)
     }
   }
 
@@ -404,17 +404,13 @@ object StreamingDedup {
     finally out.close()
   }
 
-  /** Fold the committed base + committed batch dirs (all of them when
-    * `excludeBatch` is None, else all OLDER than it) into a new base
-    * (partitioned by `partKeys` hash when given, rows sorted by `sortCols`
-    * for parquet min/max locality). With `force`, a base with NO pending
-    * batches is still rewritten — the stateP-resize path, where the base
-    * layout itself must change modulus. Consumed dirs are NOT deleted
-    * here — see the deferred-deletion contract in the header. Returns the
-    * consumed dir paths (for the deletion ledger); the new base is never
-    * among them, even when it reuses the old base's id (force + no
-    * batches: the data is materialized into the tmp dir BEFORE the old
-    * dest is deleted, so an in-place rewrite is safe). */
+  /** Delete each path that still exists (a dir recursively). */
+  private def deleteAll(fs: FileSystem, paths: Seq[String]): Unit =
+    paths.foreach { p =>
+      val path = new Path(p)
+      if (fs.exists(path)) fs.delete(path, true)
+    }
+
   private val TmpBaseRe = "\\.base_(-?\\d+)\\.tmp".r
   private val OldBaseRe = "\\.base_(-?\\d+)\\.old".r
 
@@ -449,6 +445,17 @@ object StreamingDedup {
     }
   }
 
+  /** Fold the committed base + committed batch dirs (all of them when
+    * `excludeBatch` is None, else all OLDER than it) into a new base
+    * (partitioned by `partKeys` hash when given, rows sorted by `sortCols`
+    * for parquet min/max locality). With `force`, a base with NO pending
+    * batches is still rewritten — the stateP-resize path, where the base
+    * layout itself must change modulus. Consumed dirs are NOT deleted
+    * here — see the deferred-deletion contract in the header. Returns the
+    * consumed dir paths (for the deletion ledger); the new base is never
+    * among them, even when it reuses the old base's id (force + no
+    * batches: the data is materialized into the tmp dir BEFORE the old
+    * dest is deleted, so an in-place rewrite is safe). */
   private def compactTable(spark: SparkSession, tablePath: String,
       schema: StructType, excludeBatch: Option[Long],
       partKeys: Option[Seq[Column]], sortCols: Seq[Column], stateP: Int,
@@ -457,11 +464,7 @@ object StreamingDedup {
     healInPlaceRewrite(fs, table)
     val c = committedDirs(fs, table, excludeBatch)
     if (c.batches.isEmpty && !(force && c.base.nonEmpty)) return Nil
-    val baseId = c.base.flatMap(_.getName match {
-      case BaseRe(id) => Some(id.toLong)
-      case _ => None
-    })
-    val newId = (c.batches.map(_._1) ++ baseId).max
+    val newId = (c.batches.map(_._1) ++ c.baseId).max
     val dirs = (c.base.toSeq.flatMap(basePartDirs(fs, _, None)) ++
       c.batches.map(_._2)).map(_.toString)
     val all = spark.read.schema(schema).parquet(dirs: _*)
@@ -503,41 +506,23 @@ object StreamingDedup {
     * round deferred, fold each table, write the new deletion ledger
     * (subsumed dirs + subsumed commit markers, recomputed from what is
     * actually present so a mid-round crash self-heals). */
-  /** Run one independent per-table action per spec concurrently and
-    * concatenate the results. Each action owns a disjoint table dir and
-    * submits its own Spark jobs — Spark's scheduler is thread-safe, and
-    * overlapping the seven small fold jobs turns serial driver latency
-    * into cluster-parallel work. */
-  private def parallelTables[A](
-      tables: Seq[(String, StructType, Option[Seq[Column]], Seq[Column])])(
-      f: ((String, StructType, Option[Seq[Column]], Seq[Column])) => Seq[A])
-      : Seq[A] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(Future.sequence(tables.map(t => Future(f(t)))), Duration.Inf)
-      .flatten
-  }
-
   private def compactAll(spark: SparkSession, stateDir: String,
       tables: Seq[(String, StructType, Option[Seq[Column]], Seq[Column])],
       currentBatch: Long, stateP: Int): Unit = {
     val (fs, root) = fileSystem(spark, stateDir)
     // (1) previous cycle's deferral is due: any reader that planned a scan
     // over these dirs has had a full compaction cycle to finish
-    readLedger(fs, root).foreach { p =>
-      val path = new Path(p)
-      if (fs.exists(path)) fs.delete(path, true)
-    }
+    deleteAll(fs, readLedger(fs, root))
     // (2) fold each table — tables are disjoint dirs with independent
     // read→repartition→write jobs, so submit them concurrently (the same
     // pattern as the per-batch state writes): compaction wall is the max
     // of the table folds, not their sum, and a real cluster's executors
     // stay fed instead of draining between seven small serial jobs
-    val consumed = parallelTables(tables) { case (name, schema, partKeys, sortCols) =>
-      compactTable(spark, s"$stateDir/$name", schema,
-        excludeBatch = Some(currentBatch), partKeys, sortCols, stateP)
-    }
+    val consumed = graft.core.Checkpoints.parallelRun(tables.map {
+      case (name, schema, partKeys, sortCols) => () =>
+        compactTable(spark, s"$stateDir/$name", schema,
+          excludeBatch = Some(currentBatch), partKeys, sortCols, stateP)
+    }).flatten
     // (3) defer: every dir the committed view no longer needs, RECOMPUTED
     // from what is actually present (not just this round's compactTable
     // returns) so a crash between a base rename and a ledger write
@@ -548,14 +533,8 @@ object StreamingDedup {
       val (fsT, t) = fileSystem(spark, s"$stateDir/$name")
       if (!fsT.exists(t)) Nil
       else {
-        val entries = fsT.listStatus(t).toSeq.filter(_.isDirectory)
-        val baseIds = entries.flatMap(_.getPath.getName match {
-          case BaseRe(id) if isCommitted(fsT, new Path(t, s"base_$id")) =>
-            Some(id.toLong)
-          case _ => None
-        })
-        val floor = baseIds.maxOption
-        entries.flatMap { st =>
+        val floor = committedDirs(fsT, t, None).baseId
+        fsT.listStatus(t).toSeq.filter(_.isDirectory).flatMap { st =>
           st.getPath.getName match {
             case BaseRe(id) if floor.exists(id.toLong < _) =>
               Some(st.getPath.toString)
@@ -591,12 +570,7 @@ object StreamingDedup {
     val floors = tables.flatMap { case (name, _, _, _) =>
       val (fsT, t) = fileSystem(spark, s"$stateDir/$name")
       if (!fsT.exists(t)) None
-      else Some(fsT.listStatus(t).toSeq.filter(_.isDirectory).flatMap {
-        st => st.getPath.getName match {
-          case BaseRe(id) if isCommitted(fsT, st.getPath) => Some(id.toLong)
-          case _ => None
-        }
-      }.maxOption.getOrElse(Long.MinValue))
+      else Some(committedDirs(fsT, t, None).baseId.getOrElse(Long.MinValue))
     }
     val safeFloor = if (floors.isEmpty) Long.MinValue else floors.min
     val commits = new Path(root, "commits")
@@ -614,8 +588,19 @@ object StreamingDedup {
     * value. Surfaced in the metrics table at each compaction so operators
     * raise `stateP` BEFORE probes stop pruning. */
   def recommendedStateP(baseBytes: Long, current: Int,
-      targetBytes: Long = 64L << 20): Int =
+      targetBytes: Long = TargetPartitionBytes): Int =
     math.max(current, math.ceil(baseBytes.toDouble / targetBytes).toInt)
+
+  private val TargetPartitionBytes = 64L << 20
+
+  /** [[recommendedStateP]] for the committed index base's byte size — a
+    * driver FS stat, no Spark job; None while no compaction has made one. */
+  private def indexBaseRecommendedP(spark: SparkSession, stateDir: String,
+      active: Int, targetBytes: Long = TargetPartitionBytes): Option[Int] = {
+    val (fs, index) = fileSystem(spark, s"$stateDir/index")
+    committedDirs(fs, index, excludeBatch = None).base.map(b =>
+      recommendedStateP(fs.getContentSummary(b).getLength, active, targetBytes))
+  }
 
   /** One micro-batch: probe new rows against the accumulated index, log
     * verified pairs, grow the index, compact on cadence. Pure DataFrame
@@ -772,27 +757,9 @@ object StreamingDedup {
     // and never sees some tables' rows without the others'
     val marker = commitMarker(rootPath, batchId)
     if (fsRoot.exists(marker)) { fsRoot.delete(marker, false); () }
-    // five of the six state-table writes depend only on frames already
-    // materialized (bands, sigs, anchors, windows, keeper hashes) — launch
-    // them NOW so they overlap the candidate/verify phase below instead of
-    // forming a serial write barrier at batch end (guide §2.6). They land
-    // in this batch's own dirs, invisible until the commit marker, so
-    // overlap cannot expose partial state; if a later phase throws, any
-    // files these leave behind are torn-batch residue the existing replay
-    // contract already covers (marker absent -> invisible; the retried
-    // batch overwrites its own dirs).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val earlyWrites = Seq(
-      newBands -> batchDir(indexPath),
-      sigs -> batchDir(sigsPath),
-      newAnch -> batchDir(anchPath),
-      newWins -> batchDir(winsPath),
-      keeperHashes -> batchDir(hashPath)).map { case (df, dir) =>
-      Future(df.coalesce(4).write.option("compression", "zstd")
-        .mode("overwrite").parquet(dir))
-    }
+    def writeBatch(df: DataFrame, table: String): Unit =
+      df.coalesce(4).write.option("compression", "zstd")
+        .mode("overwrite").parquet(batchDir(table))
     // prune sets assembled from the checkpoint-time accumulators above: the
     // index probe touches every partition an exact OR probe key lands in;
     // anchors are pruned by the new WINDOW keys and windows by the new
@@ -803,79 +770,101 @@ object StreamingDedup {
       "anch" -> parallelParts(3)._2,
       "wins" -> parallelParts(2)._2)
     phase("touched partitions")
-    // the band-index candidate chain and the substring candidate chain are
-    // independent until the verify stage — run them as concurrent jobs
-    // (guide §2.6), same frames and checkpoints as the serial form
-    val ((relevantOld, idxStats, cands), (anchStats, winStats, ssCands)) =
-      graft.core.Checkpoints.par2(
-        () => {
-          // bucket probe, two levels: (1) directory prune — only base
-          // partitions holding a bucket this batch touches (exact OR probe
-          // key) are even listed; (2) exact left-semi on the bucket key
-          val (oldBands0, idxStats) = readState(spark, indexPath,
-            newBands.schema, self, Some(touched0("idx")), metrics)
-          val touched = probeSet.select("band_id", "band_key").distinct()
-          val relevantOld0 = oldBands0
-            .join(touched, Seq("band_id", "band_key"), "left_semi")
-          // metrics mode materializes the (bucket-pruned, so small) probe
-          // result once, making the probed-row count a scan of local blocks
-          // instead of a recomputation of the state read + semi-join
-          val relevantOld = if (metrics)
-            graft.core.Checkpoints.ckpt(relevantOld0) else relevantOld0
-          val relevant = relevantOld.union(probeSet)
-          (relevantOld, idxStats,
-            graft.core.Checkpoints.ckpt(Dedup.candidates(relevant, cfg)))
-        },
-        () => {
-          // incremental substring pass: only joins touching a NEW row — new
-          // anchors vs all windows (new text contained in anything) plus old
-          // anchors vs new windows (anything contained in new text). Anchor
-          // and window hash tables are state, so old texts are never
-          // re-hashed; the equi-join key is `k`, so old-side reads prune to
-          // the partitions of the NEW side's keys.
-          val (oldAnch, anchStats) = readState(spark, anchPath, newAnch.schema,
-            self, Some(touched0("anch")), metrics)
-          val (oldWins, winStats) = readState(spark, winsPath, newWins.schema,
-            self, Some(touched0("wins")), metrics)
-          (anchStats, winStats, graft.core.Checkpoints.ckpt(
-            newAnch.join(oldWins.union(newWins), "k")
-              .union(oldAnch.join(newWins, "k"))
-              .filter(col("a") =!= col("b"))
-              .select(col("a"), col("b"))
-              .distinct()))
-        })
-    phase("index+substring candidates")
-    // old signatures: the MinHash verify and the substring contains-check
-    // only ever dereference ids that appear in a candidate pair — prune the
-    // signature read to exactly those ids' partitions
-    val candIds = cands.select(col("a").as("id"))
-      .union(cands.select(col("b").as("id")))
-      .union(ssCands.select(col("a").as("id")))
-      .union(ssCands.select(col("b").as("id")))
-    val sigTouched =
-      if (!hasState) Set.empty[Int]
-      else touchedPartitions(candIds, Seq(col("id")), stateP)
-    val (oldSigs, sigStats) = readState(spark, sigsPath, sigs.schema, self,
-      Some(sigTouched), metrics)
-    val allSigs = oldSigs.union(sigs)
-    val verifiedPairs = Dedup.verified(cands, allSigs, cfg)
-    val allTexts = allSigs.select(col("image_id").as("id"),
-      col("caption_norm").as("text"))
-    val ssPairs = SubstringDup.verifyContained(ssCands, allTexts)
-    phase("verify plans")
-    val allPairs = verifiedPairs.union(ssPairs).union(exactPairs)
-    val batchPairs =
-      if (metrics) graft.core.Checkpoints.ckpt(allPairs) else allPairs
-    // the pair log is the only table that needs the verify; the other five
-    // writes were launched before the candidate phase (see earlyWrites)
-    val pairsWrite = Future(batchPairs.coalesce(4)
-      .write.option("compression", "zstd")
-      .mode("overwrite").parquet(batchDir(pairsPath)))
-    Await.result(Future.sequence(earlyWrites :+ pairsWrite), Duration.Inf)
+    // candidates -> verify -> pair-log write: the one chain of this batch
+    // that needs the verify. Returns the frames and read stats the metrics
+    // row counts.
+    val chain = () => {
+      // the band-index candidate chain and the substring candidate chain are
+      // independent until the verify stage — run them as concurrent jobs
+      // (guide §2.6), same frames and checkpoints as the serial form
+      val ((relevantOld, idxStats, cands), (anchStats, winStats, ssCands)) =
+        graft.core.Checkpoints.par2(
+          () => {
+            // bucket probe, two levels: (1) directory prune — only base
+            // partitions holding a bucket this batch touches (exact OR probe
+            // key) are even listed; (2) exact left-semi on the bucket key
+            val (oldBands0, idxStats) = readState(spark, indexPath,
+              newBands.schema, self, Some(touched0("idx")), metrics)
+            val touched = probeSet.select("band_id", "band_key").distinct()
+            val relevantOld0 = oldBands0
+              .join(touched, Seq("band_id", "band_key"), "left_semi")
+            // metrics mode materializes the (bucket-pruned, so small) probe
+            // result once, making the probed-row count a scan of local
+            // blocks instead of a recomputation of the state read + semi-join
+            val relevantOld = if (metrics)
+              graft.core.Checkpoints.ckpt(relevantOld0) else relevantOld0
+            val relevant = relevantOld.union(probeSet)
+            (relevantOld, idxStats,
+              graft.core.Checkpoints.ckpt(Dedup.candidates(relevant, cfg)))
+          },
+          () => {
+            // incremental substring pass: only joins touching a NEW row — new
+            // anchors vs all windows (new text contained in anything) plus
+            // old anchors vs new windows (anything contained in new text).
+            // Anchor and window hash tables are state, so old texts are never
+            // re-hashed; the equi-join key is `k`, so old-side reads prune to
+            // the partitions of the NEW side's keys.
+            val (oldAnch, anchStats) = readState(spark, anchPath,
+              newAnch.schema, self, Some(touched0("anch")), metrics)
+            val (oldWins, winStats) = readState(spark, winsPath,
+              newWins.schema, self, Some(touched0("wins")), metrics)
+            (anchStats, winStats, graft.core.Checkpoints.ckpt(
+              newAnch.join(oldWins.union(newWins), "k")
+                .union(oldAnch.join(newWins, "k"))
+                .filter(col("a") =!= col("b"))
+                .select(col("a"), col("b"))
+                .distinct()))
+          })
+      phase("index+substring candidates")
+      // old signatures: the MinHash verify and the substring contains-check
+      // only ever dereference ids that appear in a candidate pair — prune
+      // the signature read to exactly those ids' partitions
+      val candIds = cands.select(col("a").as("id"))
+        .union(cands.select(col("b").as("id")))
+        .union(ssCands.select(col("a").as("id")))
+        .union(ssCands.select(col("b").as("id")))
+      val sigTouched =
+        if (!hasState) Set.empty[Int]
+        else touchedPartitions(candIds, Seq(col("id")), stateP)
+      val (oldSigs, sigStats) = readState(spark, sigsPath, sigs.schema, self,
+        Some(sigTouched), metrics)
+      val allSigs = oldSigs.union(sigs)
+      val verifiedPairs = Dedup.verified(cands, allSigs, cfg)
+      val allTexts = allSigs.select(col("image_id").as("id"),
+        col("caption_norm").as("text"))
+      val ssPairs = SubstringDup.verifyContained(ssCands, allTexts)
+      phase("verify plans")
+      val allPairs = verifiedPairs.union(ssPairs).union(exactPairs)
+      val batchPairs =
+        if (metrics) graft.core.Checkpoints.ckpt(allPairs) else allPairs
+      writeBatch(batchPairs, pairsPath)
+      (relevantOld, cands, batchPairs,
+        idxStats + anchStats + winStats + sigStats)
+    }
+    // the other five state-table writes depend only on frames already
+    // materialized (bands, sigs, anchors, windows, keeper hashes), so they
+    // run beside the chain instead of forming a serial write barrier at
+    // batch end (guide §2.6). They land in this batch's own dirs, invisible
+    // until the commit marker, so the overlap cannot expose partial state.
+    // If the chain or a write throws, parallelRun drains every other body
+    // first: no write job outlives the batch scope that releases the
+    // checkpoint blocks it scans, or races a replay into the same dirs. The
+    // files left behind are torn-batch residue the replay contract covers
+    // (marker absent -> invisible; the retried batch overwrites its dirs).
+    val ((relevantOld, cands, batchPairs, chainStats), _) =
+      graft.core.Checkpoints.par2(chain, () =>
+        graft.core.Checkpoints.parallelRun(Seq(
+          newBands -> indexPath,
+          sigs -> sigsPath,
+          newAnch -> anchPath,
+          newWins -> winsPath,
+          keeperHashes -> hashPath).map { case (df, table) =>
+          () => writeBatch(df, table)
+        }))
     phase("state writes")
     if (metrics) {
       import spark.implicits._
-      val st = idxStats + anchStats + winStats + sigStats + hashStats
+      val st = chainStats + hashStats
       // every counted frame is localCheckpointed — counts scan materialized
       // local blocks, never recompute pipeline work; the five counts are
       // independent scans, so they run as concurrent jobs
@@ -889,11 +878,7 @@ object StreamingDedup {
       // 0.0 on the first batch (no state, nothing to prune — no prune job)
       val touchedFrac =
         if (stateP > 0) touched0("idx").size.toDouble / stateP else 1.0
-      // recommendation derived from the committed index base's byte size —
-      // a driver FS stat, no Spark job
-      val idxBase = committedDirs(fsRoot, new Path(indexPath), self).base
-      val recP = idxBase.map(b =>
-        recommendedStateP(fsRoot.getContentSummary(b).getLength, stateP))
+      val recP = indexBaseRecommendedP(spark, stateDir, stateP)
         .getOrElse(stateP)
       val wallMs = (System.nanoTime() - tWall0) / 1000000L
       Seq((batchId, newRows, exactDropped2, probed,
@@ -940,8 +925,7 @@ object StreamingDedup {
       trigger: Trigger = Trigger.AvailableNow(),
       maxFilesPerTrigger: Int = 4, metrics: Boolean = false,
       stateP: Int = 64, compactEvery: Int = 8,
-      autoResize: Boolean = false,
-      autoResizeTargetBytes: Long = 64L << 20): StreamingQuery = {
+      autoResize: Boolean = false): StreamingQuery = {
     val stream = spark.readStream
       .schema(imageSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
@@ -958,7 +942,7 @@ object StreamingDedup {
         processBatch(spark, batch, stateDir, cfg, batchId, metrics,
           p, compactEvery)
         if (autoResize) {
-          maybeAutoResize(spark, stateDir, p, autoResizeTargetBytes); ()
+          maybeAutoResize(spark, stateDir, p); ()
         }
       }
       .start()
@@ -967,13 +951,7 @@ object StreamingDedup {
   /** The stateP persisted with the state, if any (`<stateDir>/meta/state_p`). */
   def persistedStateP(spark: SparkSession, stateDir: String): Option[Int] = {
     val (fs, root) = fileSystem(spark, stateDir)
-    val f = new Path(new Path(root, "meta"), "state_p")
-    if (!fs.exists(f)) None
-    else {
-      val in = fs.open(f)
-      try Some(scala.io.Source.fromInputStream(in).mkString.trim.toInt)
-      finally in.close()
-    }
+    readP(fs, statePFile(root))
   }
 
   /** Between-batch auto-resize: when the committed index base has outgrown
@@ -985,13 +963,8 @@ object StreamingDedup {
     * owner of the state dir, which is the resize's offline precondition.
     * The trigger reads one FS content summary — no Spark job. */
   def maybeAutoResize(spark: SparkSession, stateDir: String, active: Int,
-      targetBytes: Long = 64L << 20): Int = {
-    val (fs, _) = fileSystem(spark, stateDir)
-    val idxBase =
-      committedDirs(fs, new Path(s"$stateDir/index"), excludeBatch = None).base
-    val rec = idxBase.map(b => recommendedStateP(
-      fs.getContentSummary(b).getLength, active, targetBytes))
-    rec match {
+      targetBytes: Long = TargetPartitionBytes): Int =
+    indexBaseRecommendedP(spark, stateDir, active, targetBytes) match {
       case Some(r) if r > 2 * active =>
         println(s"StreamingDedup: auto-resize stateP $active -> $r " +
           s"(index base outgrew ${2 * active} x $targetBytes B target)")
@@ -999,7 +972,6 @@ object StreamingDedup {
         r
       case _ => active
     }
-  }
 
   val metricsSchema: StructType = StructType(Seq(
     StructField("batch_id", LongType), StructField("new_rows", LongType),
@@ -1049,7 +1021,8 @@ object StreamingDedup {
     * unpartitioned: nothing probes the table by key) and within-partition
     * sort — the single source of truth for compaction AND resize, so the
     * two can never fold a different table set. */
-  private def tableSpecs: Seq[(String, StructType, Option[Seq[Column]], Seq[Column])] =
+  private[streaming] def tableSpecs
+      : Seq[(String, StructType, Option[Seq[Column]], Seq[Column])] =
     Seq(
       ("index", bandSchema,
         Some(Seq(col("band_id"), col("band_key"))),
@@ -1090,12 +1063,9 @@ object StreamingDedup {
   def resizeStateP(spark: SparkSession, stateDir: String, newP: Int): Unit = {
     require(newP > 0, s"newP must be positive, got $newP")
     val (fs, root) = fileSystem(spark, stateDir)
-    val metaF = new Path(new Path(root, "meta"), "state_p")
-    require(fs.exists(metaF),
-      s"no persisted stateP at $stateDir — state uninitialized, nothing to resize")
-    val in = fs.open(metaF)
-    val oldP = try scala.io.Source.fromInputStream(in).mkString.trim.toInt
-    finally in.close()
+    val oldP = readP(fs, statePFile(root)).getOrElse(
+      throw new IllegalArgumentException(s"no persisted stateP at " +
+        s"$stateDir — state uninitialized, nothing to resize"))
     // resume/crash protocol: the pending marker is written BEFORE the
     // first base rewrite and removed only after meta/state_p is updated.
     // While it exists, `checkStateP` refuses to ingest (bases may be a
@@ -1107,30 +1077,22 @@ object StreamingDedup {
     // different modulus than meta now claims).
     val pending = resizePendingMarker(root)
     if (oldP == newP && !fs.exists(pending)) return
-    val pOut = fs.create(pending, true)
-    try pOut.write(s"$newP\n".getBytes("UTF-8")) finally pOut.close()
+    writeP(fs, pending, newP)
     // the previous deferred-deletion cycle is due by the offline precondition
-    readLedger(fs, root).foreach { p =>
-      val path = new Path(p)
-      if (fs.exists(path)) fs.delete(path, true)
-    }
+    deleteAll(fs, readLedger(fs, root))
     writeLedger(fs, root, Nil)
-    val consumed = parallelTables(tableSpecs) {
-      case (name, schema, partKeys, sortCols) =>
+    val consumed = graft.core.Checkpoints.parallelRun(tableSpecs.map {
+      case (name, schema, partKeys, sortCols) => () =>
         compactTable(spark, s"$stateDir/$name", schema, excludeBatch = None,
           partKeys, sortCols, newP, force = true)
-    }
-    consumed.foreach { p =>
-      val path = new Path(p)
-      if (fs.exists(path)) fs.delete(path, true)
-    }
+    }).flatten
+    deleteAll(fs, consumed)
     // every committed batch is now folded into some table's base, so every
     // marker at or below the min base floor is stale (offline: safe to
     // delete immediately, no deferral cycle needed)
     staleCommitMarkers(spark, stateDir, tableSpecs)
       .foreach(p => fs.delete(p, false))
-    val out = fs.create(metaF, true)
-    try out.write(s"$newP\n".getBytes("UTF-8")) finally out.close()
+    writeP(fs, statePFile(root), newP)
     fs.delete(pending, false)
     println(s"StreamingDedup: resized $stateDir stateP $oldP -> $newP " +
       s"(${consumed.size} consumed dirs removed)")
@@ -1151,13 +1113,11 @@ object StreamingDedup {
     * an error. */
   def clustersFromState(spark: SparkSession, stateDir: String): DataFrame = {
     import spark.implicits._
-    val (sigDf, _) = readState(spark, s"$stateDir/sigs", sigSchema,
-      excludeBatch = None, touchedP = None, wantStats = false)
-    val ids = sigDf.select(col("image_id").as("id")).distinct()
+    val ids = readCommitted(spark, stateDir, "sigs", sigSchema)
+      .select(col("image_id").as("id")).distinct()
     if (ids.isEmpty)
       return Seq.empty[(String, String)].toDF("image_id", "cluster_id")
-    val (pairs, _) = readState(spark, s"$stateDir/pairs", pairSchema,
-      excludeBatch = None, touchedP = None, wantStats = false)
+    val pairs = readCommitted(spark, stateDir, "pairs", pairSchema)
     ConnectedComponents.run(spark, pairs.select("a", "b"), ids)
       .withColumnRenamed("id", "image_id")
   }
@@ -1219,11 +1179,7 @@ object StreamingDedup {
     val sigC = committedDirs(fsS, sigT, None)
     val (fsP, pairT) = fileSystem(spark, s"$stateDir/pairs")
     val pairC = committedDirs(fsP, pairT, None)
-    def baseIdOf(c: Committed): Option[Long] = c.base.flatMap(_.getName match {
-      case BaseRe(id) => Some(id.toLong)
-      case _ => None
-    })
-    val baseFloor = (baseIdOf(sigC).toSeq ++ baseIdOf(pairC).toSeq)
+    val baseFloor = (sigC.baseId.toSeq ++ pairC.baseId.toSeq)
       .maxOption.getOrElse(Long.MinValue)
     // the snapshot id advances only over batches committed via the CENTRAL
     // per-batch marker (all tables at once). Legacy batches admitted by
@@ -1269,15 +1225,11 @@ object StreamingDedup {
         // anti-join: an id can only be NEW if the snapshot has never
         // labeled it (defensive — a replayed id must not appear both as an
         // untouched old label and as a fresh singleton)
-        val newIds =
-          (if (newSigDirs.isEmpty) emptyDf(spark, sigSchema)
-           else spark.read.schema(sigSchema).parquet(newSigDirs: _*))
-            .select(col("image_id").as("id")).distinct()
-            .join(prev.select(col("image_id").as("id")), Seq("id"), "left_anti")
-        val newPairs =
-          (if (newPairDirs.isEmpty) emptyDf(spark, pairSchema)
-           else spark.read.schema(pairSchema).parquet(newPairDirs: _*))
-            .select("a", "b").distinct().localCheckpoint()
+        val newIds = readDirs(spark, sigSchema, newSigDirs)
+          .select(col("image_id").as("id")).distinct()
+          .join(prev.select(col("image_id").as("id")), Seq("id"), "left_anti")
+        val newPairs = readDirs(spark, pairSchema, newPairDirs)
+          .select("a", "b").distinct().localCheckpoint()
         val endpoints = newPairs.select(col("a").as("image_id"))
           .union(newPairs.select(col("b").as("image_id"))).distinct()
         val affected = prev.join(endpoints, "image_id")
@@ -1308,10 +1260,9 @@ object StreamingDedup {
         // first run, or the snapshot fell behind a compaction — one full
         // pass restores incrementality
         val full = clustersFromState(spark, stateDir)
-        if (sigC.base.isEmpty && sigC.batches.isEmpty)
-          return (full, IncrementalStats(fullRecompute = true, 0L, 0L, 0L))
-        val out = writeSnapshot(full, maxBatch)
-        (out, IncrementalStats(fullRecompute = true, 0L, 0L, 0L))
+        val stats = IncrementalStats(fullRecompute = true, 0L, 0L, 0L)
+        if (sigC.base.isEmpty && sigC.batches.isEmpty) (full, stats)
+        else (writeSnapshot(full, maxBatch), stats)
     }
   }
 }

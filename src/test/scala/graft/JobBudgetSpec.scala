@@ -1,11 +1,12 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, crc32, lit, pmod}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.images.SyntheticCorpus
 import graft.index.SimIndex
-import graft.pipeline.{ConnectedComponents, Dedup}
+import graft.pipeline.{ConnectedComponents, Dedup, DedupConfig}
+import graft.streaming.StreamingDedup
 
 /** Spark job budgets of the shipped surfaces. Fixed per-job costs are most
   * of a small call, so each count is pinned where it stands: a change that
@@ -62,5 +63,23 @@ class JobBudgetSpec extends AnyFunSuite {
     val joinJobs = jobs(SimIndex.joinTopN(index, batch(cap + 1), 3, 0.8))
     assert(jobs(SimIndex.queryTopN(index, batch(cap + 1), 3, 0.8)) === 1 + joinJobs)
     assert(joinJobs > 2)
+  }
+
+  test("StreamingDedup.processBatch: pinned job counts without state, with state, and compacting") {
+    val state = Files.createTempDirectory("graft-jobbudget-stream").toString
+    val (generated, _) = SyntheticCorpus.generate(spark,
+      nGroups = 8, variantsPerGroup = 2, nDistractors = 6)
+    val images = generated.localCheckpoint()
+    def batch(id: Long, compactEvery: Int) = SparkJobs.during(spark)(
+      StreamingDedup.processBatch(spark,
+        images.filter(pmod(crc32(col("image_id")), lit(3)) === id), state,
+        DedupConfig(), batchId = id, metrics = true, stateP = 4,
+        compactEvery = compactEvery)).jobs
+    val first = batch(0L, compactEvery = 8)
+    val second = batch(1L, compactEvery = 8)
+    // two committed batches older than this one: compactEvery = 1 folds them
+    val compacting = batch(2L, compactEvery = 1)
+    assert((first, second, compacting) === ((43, 45, 57)),
+      "(no state, state present, compacting)")
   }
 }

@@ -111,34 +111,4 @@ class R6OptimizationSpec extends AnyFunSuite {
     val expected = chain9 ++ Set((201L, 300L), (1L, 2L), (1L, 3L), (2L, 3L))
     assert(got == expected)
   }
-
-  test("parallelRun registers concurrent checkpoints to the caller's scope") {
-    import spark.implicits._
-    val s = spark
-    val before = graft.core.Checkpoints.snapshot(s)
-    graft.core.Checkpoints.scopedUnit(s) {
-      val outs = graft.core.Checkpoints.parallelRun[org.apache.spark.sql.DataFrame](
-        (1 to 3).map(i => () =>
-          graft.core.Checkpoints.ckpt(Seq((i, i * 2)).toDF("a", "b"))))
-      assert(outs.forall(_.count() == 1))
-    }
-    // every block the concurrent bodies created was swept at scope exit
-    assert(graft.core.Checkpoints.snapshot(s) == before)
-  }
-
-  test("streaming batch with early-overlapped writes: state identical to serial form semantics") {
-    import graft.pipeline.DedupConfig
-    val dir = java.nio.file.Files.createTempDirectory("r6stream").toString
-    val (images, _) = graft.images.SyntheticCorpus.generate(spark, 6, 3, 4)
-    val part = pmod(crc32(col("image_id")), lit(2))
-    graft.streaming.StreamingDedup.processBatch(spark,
-      images.filter(part === 0), dir, DedupConfig(), batchId = 0L, stateP = 4)
-    graft.streaming.StreamingDedup.processBatch(spark,
-      images.filter(part === 1), dir, DedupConfig(), batchId = 1L, stateP = 4)
-    val streamed = graft.streaming.StreamingDedup.clustersFromState(spark, dir)
-      .collect().map(r => (r.getString(0), r.getString(1))).toMap
-    val batch = graft.pipeline.Dedup.run(images)
-      .collect().map(r => (r.getString(0), r.getString(1))).toMap
-    assert(streamed == batch)
-  }
 }

@@ -699,4 +699,20 @@ class StreamingDedupSpec extends AnyFunSuite {
     assert(after === before)
     ()
   }
+
+  test("streaming batch with early-overlapped writes: state identical to serial form semantics") {
+    import graft.pipeline.DedupConfig
+    val dir = java.nio.file.Files.createTempDirectory("r6stream").toString
+    val (images, _) = graft.images.SyntheticCorpus.generate(spark, 6, 3, 4)
+    val part = pmod(crc32(col("image_id")), lit(2))
+    graft.streaming.StreamingDedup.processBatch(spark,
+      images.filter(part === 0), dir, DedupConfig(), batchId = 0L, stateP = 4)
+    graft.streaming.StreamingDedup.processBatch(spark,
+      images.filter(part === 1), dir, DedupConfig(), batchId = 1L, stateP = 4)
+    val streamed = graft.streaming.StreamingDedup.clustersFromState(spark, dir)
+      .collect().map(r => (r.getString(0), r.getString(1))).toMap
+    val batch = graft.pipeline.Dedup.run(images)
+      .collect().map(r => (r.getString(0), r.getString(1))).toMap
+    assert(streamed == batch)
+  }
 }
