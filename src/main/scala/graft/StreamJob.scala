@@ -23,9 +23,12 @@ import graft.streaming.StreamingDedup
   *    it is safe to run concurrently with the ingesting instance.
   *  - `resize <newP>`: OFFLINE stateP migration (no ingesting or
   *    cluster-mode instance may be running): rewrites every state table's
-  *    base under the new modulus and persists it — the procedure
-  *    `checkStateP`'s mismatch error prescribes, and the operator response
-  *    to `metrics.recommended_p` outgrowing the active `state_p`.
+  *    base under the new modulus, which each base records in its own
+  *    `_done` marker — the operator response to `metrics.recommended_p`
+  *    outgrowing the active `state_p`. A crash part-way leaves valid state
+  *    (each base is pruned under its own modulus); re-running completes
+  *    the migration. Later ingesting launches keep the resized modulus:
+  *    their default `stateP` only seeds a table's first base.
   *
   * OWNERSHIP: at most ONE ingesting StreamJob (either non-`cluster` mode)
   * may own a given <stateDir> at a time. Structured Streaming's

@@ -202,10 +202,19 @@ object ConnectedComponents {
     * compression + union by rank, then min id per root in Spark's string
     * order ([[graft.core.CodePointOrder]], not Java's UTF-16 `<`) — exactly
     * the min-label fixpoint the loop computes. */
-  private[graft] def labelsOf(e: Array[(String, String)]): Array[(String, String)] = {
-    val index = new java.util.HashMap[String, Integer]()
-    val names = scala.collection.mutable.ArrayBuffer.empty[String]
-    def idOf(s: String): Int = {
+  private[graft] def labelsOf(e: Array[(String, String)]): Array[(String, String)] =
+    unionFind(e)(CodePointOrder.lt)
+
+  /** [[labelsOf]] for long keys, min elected numerically. */
+  private[graft] def labelsOfLong(e: Array[(Long, Long)]): Array[(Long, Long)] =
+    unionFind(e)(_ < _)
+
+  /** Union-find over edges `e`, labelling each id with the least member of
+    * its component under `lt`; ids are boxed only at the interning map. */
+  private def unionFind[K](e: Array[(K, K)])(lt: (K, K) => Boolean): Array[(K, K)] = {
+    val index = new java.util.HashMap[K, Integer]()
+    val names = scala.collection.mutable.ArrayBuffer.empty[K]
+    def idOf(s: K): Int = {
       val got = index.get(s)
       if (got ne null) got.intValue()
       else {
@@ -232,53 +241,12 @@ object ConnectedComponents {
         else { parent(rb) = ra; rank(ra) = (rank(ra) + 1).toByte }
       }
     }
-    val minOf = new java.util.HashMap[Int, String]()
+    val minOf = new java.util.HashMap[Int, K]()
     names.indices.foreach { i =>
       val r = find(i)
       val cur = minOf.get(r)
-      if (cur == null || CodePointOrder.lt(names(i), cur)) minOf.put(r, names(i))
+      if (cur == null || lt(names(i), cur)) minOf.put(r, names(i))
     }
     Array.tabulate(names.length)(i => (names(i), minOf.get(find(i))))
-  }
-
-  /** Long-keyed union-find kernel — identical structure to [[labelsOf]]
-    * with numeric min election; boxed only at the id-interning map. */
-  private[graft] def labelsOfLong(e: Array[(Long, Long)]): Array[(Long, Long)] = {
-    val index = new java.util.HashMap[java.lang.Long, Integer]()
-    val names = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def idOf(s: Long): Int = {
-      val got = index.get(s)
-      if (got ne null) got.intValue()
-      else {
-        val i = names.length
-        index.put(s, Integer.valueOf(i)); names += s; i
-      }
-    }
-    val parent = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val rank = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    def find(x0: Int): Int = {
-      var x = x0
-      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
-      x
-    }
-    e.foreach { case (as, bs) =>
-      val a = idOf(as); val b = idOf(bs)
-      while (parent.length < names.length) {
-        parent += parent.length; rank += 0
-      }
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) {
-        if (rank(ra) < rank(rb)) parent(ra) = rb
-        else if (rank(ra) > rank(rb)) parent(rb) = ra
-        else { parent(rb) = ra; rank(ra) = (rank(ra) + 1).toByte }
-      }
-    }
-    val minOf = new java.util.HashMap[Int, java.lang.Long]()
-    names.indices.foreach { i =>
-      val r = find(i)
-      val cur = minOf.get(r)
-      if (cur == null || names(i) < cur) minOf.put(r, java.lang.Long.valueOf(names(i)))
-    }
-    Array.tabulate(names.length)(i => (names(i), minOf.get(find(i)).longValue()))
   }
 }

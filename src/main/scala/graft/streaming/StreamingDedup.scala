@@ -54,12 +54,16 @@ import graft.pipeline.{ConnectedComponents, Dedup, DedupConfig, SubstringDup}
   * growing per batch forever. `stateP` is sized so a typical micro-batch
   * touches a minority of partitions (bigger index / smaller batches →
   * raise it; it plays the role of Iceberg's `bucket(band_key)` partition
-  * spec at cluster scale). `stateP` is PERSISTED with the state
-  * (`<stateDir>/meta/state_p`) and validated every batch: base `p=` dirs
-  * written under one modulus must never be pruned under another (that
-  * would silently skip partitions holding real duplicates), so a mismatch
-  * fails fast with the recompaction procedure in the error. The metrics
-  * table reports the observed touched-partition fraction and a
+  * spec at cluster scale). Like an Iceberg data file that records the
+  * spec it was written under, each base records the modulus it was
+  * partitioned by in its own `_done` marker (`p=<k>`), and every prune set
+  * is computed under the modulus of the base it prunes. The launch
+  * `stateP` only seeds a table's first base; compaction keeps a base's
+  * modulus until `resizeStateP` rewrites it, so tables may carry
+  * different moduli (an interrupted resize) and every such mix reads
+  * correctly. A base whose marker names no modulus (written before bases
+  * recorded one, or a torn marker) is read whole, never mis-pruned. The
+  * metrics table reports the observed touched-partition fraction and a
   * recommended `stateP` derived from base size at each compaction, so an
   * operator sees when pruning stops working (fraction → 1) BEFORE it
   * matters.
@@ -87,7 +91,9 @@ import graft.pipeline.{ConnectedComponents, Dedup, DedupConfig, SubstringDup}
   *      invisible. Consumed dirs are NOT deleted at compaction time: a
   *      concurrent cluster-mode reader may have lazily planned a scan
   *      over them (Spark fails mid-job on files deleted under a planned
-  *      scan). They go onto a deletion ledger (`<stateDir>/_pending_delete`)
+  *      scan). They go onto a deletion ledger (`<stateDir>/_pending_delete`,
+  *      entries relative to the state dir, so a copy of the dir never
+  *      deletes the original's files)
   *      and are removed one full compaction cycle later — any scan planned
   *      against the old view has long finished, and the reader rule
   *      (newest base subsumes every older batch/base) keeps the lingering
@@ -121,17 +127,38 @@ object StreamingDedup {
   private val BaseRe = "base_(-?\\d+)".r
   private val BatchRe = "batch_(-?\\d+)".r
 
+  /** The file system of `path` and the path qualified against it, so paths
+    * built from it compare equal to the paths its listings return. */
   private def fileSystem(spark: SparkSession, path: String): (FileSystem, Path) = {
     val p = new Path(path)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    (fs, fs.makeQualified(p))
   }
 
   private def isCommitted(fs: FileSystem, dir: Path): Boolean =
     fs.exists(new Path(dir, "_done"))
 
-  private def markDone(fs: FileSystem, dir: Path): Unit = {
+  /** Commit `dir` with a `_done` marker; a base's marker names the modulus
+    * its `p=` dirs were partitioned by (`p=<k>` and a newline). */
+  private def markDone(fs: FileSystem, dir: Path,
+      stateP: Option[Int] = None): Unit = {
     val out = fs.create(new Path(dir, "_done"), true)
-    out.close()
+    try stateP.foreach(p => out.write(s"p=$p\n".getBytes("UTF-8")))
+    finally out.close()
+  }
+
+  private val MarkerPRe = "p=(\\d+)\n".r
+
+  /** The modulus a committed base's `_done` names. None for an empty marker
+    * (an unpartitioned table, or a base written before bases recorded
+    * their modulus) and for a torn one (no trailing newline): such a base
+    * is read whole. */
+  private def markedP(fs: FileSystem, dir: Path): Option[Int] = {
+    val in = fs.open(new Path(dir, "_done"))
+    try new String(in.readAllBytes(), "UTF-8") match {
+      case MarkerPRe(p) => p.toIntOption.filter(_ > 0)
+      case _ => None
+    } finally in.close()
   }
 
   private def clearDone(fs: FileSystem, dir: Path): Unit = {
@@ -163,13 +190,14 @@ object StreamingDedup {
     * marker (in-flight, torn) and batch dirs subsumed by the base
     * (deferred-delete leftovers, or survivors of a crash between compaction
     * rename and ledger write) are ignored. `baseId` is the base's id: the
-    * table's floor, at or below which every batch is folded in. */
+    * table's floor, at or below which every batch is folded in. `baseP` is
+    * the modulus the base's `_done` names (see [[markedP]]). */
   private case class Committed(base: Option[Path], baseId: Option[Long],
-      batches: Seq[(Long, Path)])
+      baseP: Option[Int], batches: Seq[(Long, Path)])
 
   private def committedDirs(fs: FileSystem, table: Path,
       excludeBatch: Option[Long]): Committed = {
-    if (!fs.exists(table)) return Committed(None, None, Nil)
+    if (!fs.exists(table)) return Committed(None, None, None, Nil)
     val committed = committedBatchIds(fs, commitsDir(table))
     val entries = fs.listStatus(table).toSeq.filter(_.isDirectory)
     val bases = entries.flatMap { st =>
@@ -183,20 +211,15 @@ object StreamingDedup {
     val floor = base.map(_._1)
     val batches = entries.flatMap { st =>
       st.getPath.getName match {
-        // a batch dir is committed via the central per-batch marker, or —
-        // legacy migration — via a per-dir _done file (the pre-unified
-        // protocol, where each table's dir carried its own marker); new
-        // writers never create per-dir markers on batch dirs, so this
-        // cannot resurrect a torn new-protocol batch
-        case BatchRe(id) if (committed.contains(id.toLong) ||
-              isCommitted(fs, st.getPath)) &&
+        case BatchRe(id) if committed.contains(id.toLong) &&
             !excludeBatch.contains(id.toLong) &&
             floor.forall(id.toLong > _) =>
           Some((id.toLong, st.getPath))
         case _ => None
       }
     }.sortBy(_._1)
-    Committed(base.map(_._2), floor, batches)
+    Committed(base.map(_._2), floor, base.flatMap(b => markedP(fs, b._2)),
+      batches)
   }
 
   private def parquetFiles(fs: FileSystem, dir: Path): Long =
@@ -234,16 +257,22 @@ object StreamingDedup {
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
+  /** A prune set: the modulus it was computed under and the state
+    * partitions a batch's keys land in under it. */
+  private type Prune = (Int, Set[Int])
+
   /** Read a table's committed state, pruned: base partitions restricted to
-    * `touchedP`; uncompacted batch dirs always read in full (they are few
-    * and small by construction). Returns the frame plus file-level read
-    * stats when `wantStats`. */
+    * the `touched` set when the base names the set's modulus (any other
+    * base is read whole); uncompacted batch dirs always read in full (they
+    * are few and small by construction). Returns the frame plus file-level
+    * read stats when `wantStats`. */
   private def readState(spark: SparkSession, tablePath: String,
       schema: StructType, excludeBatch: Option[Long],
-      touchedP: Option[Set[Int]],
+      touched: Option[Prune],
       wantStats: Boolean): (DataFrame, ReadStats) = {
     val (fs, table) = fileSystem(spark, tablePath)
     val c = committedDirs(fs, table, excludeBatch)
+    val touchedP = touched.collect { case (p, set) if c.baseP.contains(p) => set }
     val baseDirs = c.base.toSeq.flatMap(basePartDirs(fs, _, touchedP))
     val dirs = (baseDirs ++ c.batches.map(_._2)).map(_.toString)
     val df = readDirs(spark, schema, dirs)
@@ -267,7 +296,7 @@ object StreamingDedup {
   def readCommitted(spark: SparkSession, stateDir: String, table: String,
       schema: StructType): DataFrame =
     readState(spark, s"$stateDir/$table", schema, excludeBatch = None,
-      touchedP = None, wantStats = false)._1
+      touched = None, wantStats = false)._1
 
   /** The committed pair log (may hold duplicate pairs from re-probes /
     * replayed batches; `distinct` is the caller's choice). */
@@ -277,139 +306,89 @@ object StreamingDedup {
   private def partCol(cols: Seq[Column], p: Int): Column =
     pmod(xxhash64(cols: _*), lit(p.toLong)).cast("int")
 
-  /** The distinct state-partition numbers `df`'s keys take — the
-    * touched-partition set driving directory pruning, in one Spark job.
-    * Uses `partCol` itself so read- and write-side partitioning can never
-    * diverge. */
+  /** The distinct state-partition numbers `df`'s keys take under modulus
+    * `p` — the touched-partition set driving directory pruning, in one Spark
+    * job; None (and no job) when `p` is None: the table to prune has no
+    * base naming a modulus, so it is read whole. Uses `partCol` itself so
+    * read- and write-side partitioning can never diverge. */
   private def touchedPartitions(df: DataFrame, keys: Seq[Column],
-      p: Int): Set[Int] =
-    df.select(partCol(keys, p).as("p")).distinct().collect()
-      .map(_.getInt(0)).toSet
+      p: Option[Int]): Option[Prune] =
+    p.map(m => (m, df.select(partCol(keys, m).as("p")).distinct().collect()
+      .map(_.getInt(0)).toSet))
 
   /** `Checkpoints.ckpt` + the frame's distinct state-partition numbers for
-    * `keys`, collected as a SIDE EFFECT of the same materialization job via
-    * a set-semantics accumulator — the separate touched-partition job per
-    * table becomes free. Correctness notes: the helper column rides the
-    * checkpointed blocks and is projected away before the frame is
-    * returned (consumers and state writes see the original schema); the
-    * UDF is marked non-deterministic so the optimizer can neither
-    * eliminate nor duplicate it; accumulator updates from every partition
-    * are visible once the (synchronous) checkpoint job completes, and
-    * retried/speculative tasks can only re-add the same set members. Uses
-    * `partCol` itself, so read- and write-side partitioning cannot
-    * diverge. With `want = false` (no committed state — nothing will be
-    * pruned) it degrades to a plain checkpoint and an empty set. */
-  private def ckptTouched(df: DataFrame, keys: Seq[Column], p: Int,
-      want: Boolean): (DataFrame, Set[Int]) = {
-    if (!want) (graft.core.Checkpoints.ckpt(df), Set.empty)
-    else {
+    * `keys` under modulus `p`, collected as a SIDE EFFECT of the same
+    * materialization job via a set-semantics accumulator — the separate
+    * touched-partition job per table becomes free. Correctness notes: the
+    * helper column rides the checkpointed blocks and is projected away
+    * before the frame is returned (consumers and state writes see the
+    * original schema); the UDF is marked non-deterministic so the optimizer
+    * can neither eliminate nor duplicate it; accumulator updates from every
+    * partition are visible once the (synchronous) checkpoint job completes,
+    * and retried/speculative tasks can only re-add the same set members.
+    * Uses `partCol` itself, so read- and write-side partitioning cannot
+    * diverge. With `p = None` (the pruned table has no base naming a
+    * modulus — nothing will be pruned) it degrades to a plain checkpoint
+    * and no prune set. */
+  private def ckptTouched(df: DataFrame, keys: Seq[Column],
+      p: Option[Int]): (DataFrame, Option[Prune]) = p match {
+    case None => (graft.core.Checkpoints.ckpt(df), None)
+    case Some(m) =>
       val spark = df.sparkSession
       val acc = new org.apache.spark.util.CollectionAccumulator[java.lang.Integer]()
       spark.sparkContext.register(acc, "touchedP")
       val tap = udf((x: Int) => { acc.add(x); x }).asNondeterministic()
       val ck = graft.core.Checkpoints.ckpt(
-        df.withColumn("__touched_p", tap(partCol(keys, p))))
+        df.withColumn("__touched_p", tap(partCol(keys, m))))
       import scala.jdk.CollectionConverters._
-      (ck.drop("__touched_p"), acc.value.asScala.map(_.intValue()).toSet)
-    }
-  }
-
-  // ---------------------------------------------------------------- stateP
-  private def statePFile(stateDir: Path): Path =
-    new Path(new Path(stateDir, "meta"), "state_p")
-
-  private def resizePendingMarker(stateDir: Path): Path =
-    new Path(new Path(stateDir, "meta"), "resize_pending")
-
-  /** The partition count a `meta/` file holds (`meta/state_p`, or the
-    * target of the `meta/resize_pending` marker), if the file exists. */
-  private def readP(fs: FileSystem, f: Path): Option[Int] =
-    if (!fs.exists(f)) None
-    else {
-      val in = fs.open(f)
-      try Some(scala.io.Source.fromInputStream(in).mkString.trim.toInt)
-      finally in.close()
-    }
-
-  private def writeP(fs: FileSystem, f: Path, p: Int): Unit = {
-    val out = fs.create(f, true)
-    try out.write(s"$p\n".getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Persist-or-validate the state partition count. The base `p=` layout is
-    * a function of `stateP`; pruning under a different modulus silently
-    * skips partitions holding relevant rows, so a mismatch is an error, not
-    * a degradation. */
-  private def checkStateP(fs: FileSystem, stateDir: Path, stateP: Int): Unit = {
-    // an interrupted offline resize may have rewritten SOME tables' bases
-    // under the new modulus while meta/state_p still holds the old one —
-    // pruning those bases with old-modulus touched sets would silently
-    // skip partitions holding real duplicates, so refuse to ingest until
-    // the resize is re-run to completion
-    require(!fs.exists(resizePendingMarker(stateDir)),
-      s"a stateP resize of $stateDir was interrupted mid-rewrite (meta/" +
-        "resize_pending exists): some bases may already use the new " +
-        "modulus. Re-run StreamingDedup.resizeStateP (StreamJob `resize` " +
-        "mode) to completion before ingesting — it is idempotent.")
-    readP(fs, statePFile(stateDir)) match {
-      case Some(persisted) =>
-        require(persisted == stateP,
-          s"stateP mismatch: state at $stateDir was written with " +
-            s"stateP=$persisted but this run uses stateP=$stateP. Probing " +
-            "would silently mis-prune base partitions. Either restart with " +
-            s"stateP=$persisted, or migrate offline with " +
-            "StreamingDedup.resizeStateP (StreamJob `resize` mode): it " +
-            "rewrites every table's base under the new modulus and updates " +
-            "meta/state_p atomically w.r.t. the reader rule.")
-      case None =>
-        // adopt this run's stateP only for a FRESH state dir: pre-existing
-        // base/batch dirs without a persisted modulus (state written by a
-        // pre-meta version) were laid out under an unknown stateP, and
-        // adopting blindly would mis-prune exactly like the mismatch above
-        val preexisting = tableSpecs.map(_._1).exists { name =>
-          val t = new Path(stateDir, name)
-          fs.exists(t) && fs.listStatus(t).exists(st => st.isDirectory &&
-            Seq(BaseRe, BatchRe).exists(_.matches(st.getPath.getName)))
-        }
-        require(!preexisting,
-          s"state at $stateDir has base/batch dirs but no persisted " +
-            "meta/state_p (written by a pre-meta version). Refusing to " +
-            s"adopt stateP=$stateP blindly — if it differs from the value " +
-            "the state was written with, probes would silently mis-prune. " +
-            "Write the ORIGINAL partition count to meta/state_p, then " +
-            "restart (and resize offline if a different value is wanted).")
-        writeP(fs, statePFile(stateDir), stateP)
-    }
+      (ck.drop("__touched_p"),
+        Some((m, acc.value.asScala.map(_.intValue()).toSet)))
   }
 
   // ------------------------------------------------------------ compaction
   private def pendingLedger(stateDir: Path): Path =
     new Path(stateDir, "_pending_delete")
 
-  private def readLedger(fs: FileSystem, stateDir: Path): Seq[String] = {
-    val f = pendingLedger(stateDir)
+  /** `p` relative to the state root `root`, if it lies under it. */
+  private def underRoot(root: Path, p: Path): Option[String] = {
+    val rel = root.toUri.relativize(p.toUri)
+    if (rel.isAbsolute || rel.getPath.isEmpty || rel.getPath.startsWith("/"))
+      None
+    else Some(rel.getPath)
+  }
+
+  /** The ledger's entries as paths under `root`. Entries are relative to
+    * the state dir; an absolute one (the form older ledgers held) counts
+    * only if it lies under this root, so a copy of a state dir never
+    * deletes the dirs of the state dir it was copied from. */
+  private def readLedger(fs: FileSystem, root: Path): Seq[Path] = {
+    val f = pendingLedger(root)
     if (!fs.exists(f)) Nil
     else {
       val in = fs.open(f)
-      try scala.io.Source.fromInputStream(in).getLines()
-        .map(_.trim).filter(_.nonEmpty).toList
-      finally in.close()
+      val lines =
+        try scala.io.Source.fromInputStream(in).getLines()
+          .map(_.trim).filter(_.nonEmpty).toList
+        finally in.close()
+      lines.flatMap { l =>
+        val p = new Path(l)
+        if (!p.isAbsolute && p.toUri.getScheme == null) Some(l)
+        else underRoot(root, p.makeQualified(fs.getUri, fs.getWorkingDirectory))
+      }.map(new Path(root, _))
     }
   }
 
-  private def writeLedger(fs: FileSystem, stateDir: Path,
-      paths: Seq[String]): Unit = {
-    val out = fs.create(pendingLedger(stateDir), true)
-    try out.write(paths.mkString("", "\n", "\n").getBytes("UTF-8"))
+  private def writeLedger(fs: FileSystem, root: Path,
+      paths: Seq[Path]): Unit = {
+    val out = fs.create(pendingLedger(root), true)
+    try out.write(paths.flatMap(underRoot(root, _))
+      .mkString("", "\n", "\n").getBytes("UTF-8"))
     finally out.close()
   }
 
   /** Delete each path that still exists (a dir recursively). */
-  private def deleteAll(fs: FileSystem, paths: Seq[String]): Unit =
-    paths.foreach { p =>
-      val path = new Path(p)
-      if (fs.exists(path)) fs.delete(path, true)
-    }
+  private def deleteAll(fs: FileSystem, paths: Seq[Path]): Unit =
+    paths.foreach(p => if (fs.exists(p)) fs.delete(p, true))
 
   private val TmpBaseRe = "\\.base_(-?\\d+)\\.tmp".r
   private val OldBaseRe = "\\.base_(-?\\d+)\\.old".r
@@ -448,22 +427,28 @@ object StreamingDedup {
   /** Fold the committed base + committed batch dirs (all of them when
     * `excludeBatch` is None, else all OLDER than it) into a new base
     * (partitioned by `partKeys` hash when given, rows sorted by `sortCols`
-    * for parquet min/max locality). With `force`, a base with NO pending
-    * batches is still rewritten — the stateP-resize path, where the base
-    * layout itself must change modulus. Consumed dirs are NOT deleted
-    * here — see the deferred-deletion contract in the header. Returns the
-    * consumed dir paths (for the deletion ledger); the new base is never
-    * among them, even when it reuses the old base's id (force + no
-    * batches: the data is materialized into the tmp dir BEFORE the old
-    * dest is deleted, so an in-place rewrite is safe). */
+    * for parquet min/max locality). A partitioned base keeps the modulus
+    * its own `_done` names; `stateP` seeds a table's first base (and
+    * replaces a base that names none). With `force`, every partitioned
+    * table is laid out under `stateP`, and a base with NO pending batches
+    * is still rewritten unless it already is — the stateP-resize path.
+    * Consumed dirs are NOT deleted here — see the deferred-deletion
+    * contract in the header. Returns the consumed dir paths (for the
+    * deletion ledger); the new base is never among them, even when it
+    * reuses the old base's id (force + no batches: the data is
+    * materialized into the tmp dir BEFORE the old dest is deleted, so an
+    * in-place rewrite is safe). */
   private def compactTable(spark: SparkSession, tablePath: String,
       schema: StructType, excludeBatch: Option[Long],
       partKeys: Option[Seq[Column]], sortCols: Seq[Column], stateP: Int,
-      force: Boolean = false): Seq[String] = {
+      force: Boolean = false): Seq[Path] = {
     val (fs, table) = fileSystem(spark, tablePath)
     healInPlaceRewrite(fs, table)
     val c = committedDirs(fs, table, excludeBatch)
-    if (c.batches.isEmpty && !(force && c.base.nonEmpty)) return Nil
+    val p = if (force) stateP else c.baseP.getOrElse(stateP)
+    val relayout = force && c.base.nonEmpty && partKeys.nonEmpty &&
+      !c.baseP.contains(p)
+    if (c.batches.isEmpty && !relayout) return Nil
     val newId = (c.batches.map(_._1) ++ c.baseId).max
     val dirs = (c.base.toSeq.flatMap(basePartDirs(fs, _, None)) ++
       c.batches.map(_._2)).map(_.toString)
@@ -472,7 +457,7 @@ object StreamingDedup {
     if (fs.exists(tmp)) fs.delete(tmp, true)
     partKeys match {
       case Some(keys) =>
-        all.withColumn("p", partCol(keys, stateP))
+        all.withColumn("p", partCol(keys, p))
           .repartition(col("p"))
           .sortWithinPartitions(col("p") +: sortCols: _*)
           .write.option("compression", "zstd")
@@ -481,7 +466,7 @@ object StreamingDedup {
         all.coalesce(4).write.option("compression", "zstd")
           .mode("overwrite").parquet(tmp.toString)
     }
-    markDone(fs, tmp)
+    markDone(fs, tmp, partKeys.map(_ => p))
     val dest = new Path(table, s"base_$newId")
     // never delete a live base before the new one is in place: when dest
     // is occupied (in-place rewrite — the force/resize path, or a crash
@@ -496,10 +481,8 @@ object StreamingDedup {
       require(fs.rename(dest, aside), s"aside rename failed: $dest -> $aside")
     }
     require(fs.rename(tmp, dest), s"compaction rename failed: $tmp -> $dest")
-    val consumedBase = c.base.map(b =>
-      if (b.toString == dest.toString) aside else b)
-    (consumedBase.toSeq ++ c.batches.map(_._2)).map(_.toString)
-      .filter(_ != dest.toString)
+    val consumedBase = c.base.map(b => if (b == dest) aside else b)
+    (consumedBase.toSeq ++ c.batches.map(_._2)).filter(_ != dest)
   }
 
   /** One compaction round across all state tables: delete what the previous
@@ -537,23 +520,22 @@ object StreamingDedup {
         fsT.listStatus(t).toSeq.filter(_.isDirectory).flatMap { st =>
           st.getPath.getName match {
             case BaseRe(id) if floor.exists(id.toLong < _) =>
-              Some(st.getPath.toString)
+              Some(st.getPath)
             case BatchRe(id) if floor.exists(id.toLong <= _) &&
                 id.toLong != currentBatch =>
-              Some(st.getPath.toString)
+              Some(st.getPath)
             case TmpBaseRe(id) if floor.exists(id.toLong <= _) &&
                 fsT.exists(new Path(t, s"base_$id")) =>
-              Some(st.getPath.toString)
+              Some(st.getPath)
             case OldBaseRe(id) if fsT.exists(new Path(t, s"base_$id")) =>
-              Some(st.getPath.toString)
+              Some(st.getPath)
             case _ => None
           }
         }
       }
     }
-    val staleMarkers =
-      staleCommitMarkers(spark, stateDir, tables).map(_.toString)
-    writeLedger(fs, root, (consumed ++ swept ++ staleMarkers).distinct)
+    writeLedger(fs, root,
+      (consumed ++ swept ++ staleCommitMarkers(spark, stateDir, tables)).distinct)
   }
 
   /** Commit markers safe to drop: every batch at or below the MIN base
@@ -593,13 +575,22 @@ object StreamingDedup {
 
   private val TargetPartitionBytes = 64L << 20
 
-  /** [[recommendedStateP]] for the committed index base's byte size — a
-    * driver FS stat, no Spark job; None while no compaction has made one. */
-  private def indexBaseRecommendedP(spark: SparkSession, stateDir: String,
-      active: Int, targetBytes: Long = TargetPartitionBytes): Option[Int] = {
+  /** The modulus the committed index base was partitioned by — the
+    * stream's active `stateP`. None while no base names one (no compaction
+    * yet, or a base written before bases recorded their modulus). */
+  def indexStateP(spark: SparkSession, stateDir: String): Option[Int] = {
     val (fs, index) = fileSystem(spark, s"$stateDir/index")
-    committedDirs(fs, index, excludeBatch = None).base.map(b =>
-      recommendedStateP(fs.getContentSummary(b).getLength, active, targetBytes))
+    committedDirs(fs, index, excludeBatch = None).baseP
+  }
+
+  /** The index base's modulus and [[recommendedStateP]] for its byte size —
+    * a driver FS stat, no Spark job; None while no base names a modulus. */
+  private def indexBaseRecommendedP(spark: SparkSession, stateDir: String,
+      targetBytes: Long = TargetPartitionBytes): Option[(Int, Int)] = {
+    val (fs, index) = fileSystem(spark, s"$stateDir/index")
+    val c = committedDirs(fs, index, excludeBatch = None)
+    for (b <- c.base; p <- c.baseP) yield
+      (p, recommendedStateP(fs.getContentSummary(b).getLength, p, targetBytes))
   }
 
   /** One micro-batch: probe new rows against the accumulated index, log
@@ -616,6 +607,9 @@ object StreamingDedup {
     * from already-materialized frames plus one query Observation — no
     * recomputation jobs on the timed path. The metrics table is committed
     * and compacted like every other state table.
+    *
+    * `stateP` seeds the modulus of a table's first base; a table with a
+    * base keeps that base's own modulus (see the header).
     *
     * `batchId` must be unique per DISTINCT batch and monotonically
     * increasing (the streaming engine guarantees both); a replay of the
@@ -650,7 +644,6 @@ object StreamingDedup {
       tPhase = t
     }
     val (fsRoot, rootPath) = fileSystem(spark, stateDir)
-    checkStateP(fsRoot, rootPath, stateP)
     val indexPath = s"$stateDir/index"
     val sigsPath = s"$stateDir/sigs"
     val anchPath = s"$stateDir/ss_anchors"
@@ -659,17 +652,19 @@ object StreamingDedup {
     val hashPath = s"$stateDir/hashes"
     def batchDir(table: String) = s"$table/batch_$batchId"
     val self = Some(batchId)
-    // first-batch short-circuit: all tables commit atomically, so the
-    // index table's committed set witnesses whether ANY state exists. With
-    // none, there is nothing to prune (or read) — skip the prune-set jobs
-    // entirely instead of computing partition sets no read will consult
-    // (measured: ~1.5 s of a 6 s single-batch drain was prune-set jobs
-    // against an empty store). committedDirs already excludes this batch,
-    // so computing it before the marker withdrawal below is equivalent.
-    val hasState = {
-      val c = committedDirs(fsRoot, new Path(indexPath), self)
-      c.base.nonEmpty || c.batches.nonEmpty
+    // each prune set is computed under the modulus of the base it prunes:
+    // index for band and probe rows, ss_windows for anchors, ss_anchors for
+    // windows, hashes for hashes, sigs for candidate ids. A table with no
+    // base naming a modulus has nothing to prune (its batch dirs are read
+    // whole), so no prune set is computed for it — on a fresh state dir
+    // that skips every prune-set job. committedDirs already excludes this
+    // batch, so reading the bases before the marker withdrawal below is
+    // equivalent.
+    def baseP(table: String): Option[Int] = {
+      val (fs, t) = fileSystem(spark, table)
+      committedDirs(fs, t, self).baseP
     }
+    val idxP = baseP(indexPath)
     // ---- exact front tier: rows with an IDENTICAL RECORD (bytes AND
     // caption — `TieredImageDedup.recordSha`; a byte-identical row with a
     // different caption must survive, its caption drives minhash/substring
@@ -689,13 +684,13 @@ object StreamingDedup {
       batch.select(col("image_id"),
         graft.pipeline.TieredImageDedup.recordSha(col("bytes"), col("caption"))
           .as("record_sha")),
-      Seq(col("record_sha")), stateP, want = hasState)
+      Seq(col("record_sha")), baseP(hashPath))
     // empty-batch early-out AFTER the hash pass: probing emptiness on the
     // materialized (local-block) frame folds the previous separate
     // source-scan isEmpty job into the checkpoint the tier needs anyway
     if (newHashes.isEmpty) return
     val (oldHashes, hashStats) = readState(spark, hashPath, hashSchema,
-      self, Some(hashTouched), metrics)
+      self, hashTouched, metrics)
     val oldRep = oldHashes.groupBy("record_sha")
       .agg(min("image_id").as("rep"))
     val minNew = newHashes.groupBy("record_sha")
@@ -733,16 +728,15 @@ object StreamingDedup {
     // separate combined prune-set job is gone
     val bandKeys = Seq(col("band_id"), col("band_key"))
     val parallelParts =
-      graft.core.Checkpoints.parallelRun[(DataFrame, Set[Int])](Seq(
-        () => ckptTouched(Dedup.bands(sigs, cfg), bandKeys, stateP, hasState),
+      graft.core.Checkpoints.parallelRun[(DataFrame, Option[Prune])](Seq(
+        () => ckptTouched(Dedup.bands(sigs, cfg), bandKeys, idxP),
         () => if (cfg.bandProbes > 0)
-          ckptTouched(Dedup.probeBands(sigsAll, cfg), bandKeys, stateP,
-            hasState)
-        else (null, Set.empty[Int]),
+          ckptTouched(Dedup.probeBands(sigsAll, cfg), bandKeys, idxP)
+        else (null, None),
         () => ckptTouched(SubstringDup.anchorTable(newTexts, w),
-          Seq(col("k")), stateP, hasState),
+          Seq(col("k")), baseP(winsPath)),
         () => ckptTouched(SubstringDup.windowTable(newTexts, w),
-          Seq(col("k")), stateP, hasState)))
+          Seq(col("k")), baseP(anchPath))))
     val newBands = parallelParts(0)._1
     // exact + probe rows: everything this batch PROBES with (per-band
     // flipped-key rows collide with stored exact keys one bit-flip away)
@@ -763,12 +757,11 @@ object StreamingDedup {
     // prune sets assembled from the checkpoint-time accumulators above: the
     // index probe touches every partition an exact OR probe key lands in;
     // anchors are pruned by the new WINDOW keys and windows by the new
-    // ANCHOR keys (the incremental substring join's two directions) — the
-    // same sets the former dedicated job computed
-    val touched0 = Map(
-      "idx" -> (parallelParts(0)._2 ++ parallelParts(1)._2),
-      "anch" -> parallelParts(3)._2,
-      "wins" -> parallelParts(2)._2)
+    // ANCHOR keys (the incremental substring join's two directions)
+    val idxTouched = parallelParts(0)._2.map { case (p, set) =>
+      (p, set ++ parallelParts(1)._2.toSeq.flatMap(_._2)) }
+    val anchTouched = parallelParts(3)._2
+    val winsTouched = parallelParts(2)._2
     phase("touched partitions")
     // candidates -> verify -> pair-log write: the one chain of this batch
     // that needs the verify. Returns the frames and read stats the metrics
@@ -784,7 +777,7 @@ object StreamingDedup {
             // partitions holding a bucket this batch touches (exact OR probe
             // key) are even listed; (2) exact left-semi on the bucket key
             val (oldBands0, idxStats) = readState(spark, indexPath,
-              newBands.schema, self, Some(touched0("idx")), metrics)
+              newBands.schema, self, idxTouched, metrics)
             val touched = probeSet.select("band_id", "band_key").distinct()
             val relevantOld0 = oldBands0
               .join(touched, Seq("band_id", "band_key"), "left_semi")
@@ -805,9 +798,9 @@ object StreamingDedup {
             // re-hashed; the equi-join key is `k`, so old-side reads prune to
             // the partitions of the NEW side's keys.
             val (oldAnch, anchStats) = readState(spark, anchPath,
-              newAnch.schema, self, Some(touched0("anch")), metrics)
+              newAnch.schema, self, anchTouched, metrics)
             val (oldWins, winStats) = readState(spark, winsPath,
-              newWins.schema, self, Some(touched0("wins")), metrics)
+              newWins.schema, self, winsTouched, metrics)
             (anchStats, winStats, graft.core.Checkpoints.ckpt(
               newAnch.join(oldWins.union(newWins), "k")
                 .union(oldAnch.join(newWins, "k"))
@@ -823,11 +816,8 @@ object StreamingDedup {
         .union(cands.select(col("b").as("id")))
         .union(ssCands.select(col("a").as("id")))
         .union(ssCands.select(col("b").as("id")))
-      val sigTouched =
-        if (!hasState) Set.empty[Int]
-        else touchedPartitions(candIds, Seq(col("id")), stateP)
       val (oldSigs, sigStats) = readState(spark, sigsPath, sigs.schema, self,
-        Some(sigTouched), metrics)
+        touchedPartitions(candIds, Seq(col("id")), baseP(sigsPath)), metrics)
       val allSigs = oldSigs.union(sigs)
       val verifiedPairs = Dedup.verified(cands, allSigs, cfg)
       val allTexts = allSigs.select(col("image_id").as("id"),
@@ -875,15 +865,15 @@ object StreamingDedup {
           () => labeledNew.filter(col("image_id") =!= col("canon")).count(),
           () => cands.count(),
           () => batchPairs.count()))
-      // 0.0 on the first batch (no state, nothing to prune — no prune job)
+      // 0.0 while the index has no base naming a modulus (nothing pruned)
       val touchedFrac =
-        if (stateP > 0) touched0("idx").size.toDouble / stateP else 1.0
-      val recP = indexBaseRecommendedP(spark, stateDir, stateP)
-        .getOrElse(stateP)
+        idxTouched.fold(0.0) { case (p, set) => set.size.toDouble / p }
+      val (activeP, recP) =
+        indexBaseRecommendedP(spark, stateDir).getOrElse((stateP, stateP))
       val wallMs = (System.nanoTime() - tWall0) / 1000000L
       Seq((batchId, newRows, exactDropped2, probed,
           candCount, pairCount, st.filesRead, st.filesTotal,
-          touchedFrac, stateP, recP, wallMs))
+          touchedFrac, activeP, recP, wallMs))
         .toDF("batch_id", "new_rows", "exact_dropped", "index_rows_probed",
           "candidate_pairs", "pairs_appended",
           "state_files_read", "state_files_total",
@@ -891,9 +881,10 @@ object StreamingDedup {
         .coalesce(1).write.mode("overwrite")
         .parquet(batchDir(s"$stateDir/metrics"))
       if (touchedFrac > 0.5)
-        println(s"StreamingDedup: batch $batchId touched " +
-          f"$touchedFrac%.2f of $stateP state partitions — pruning is " +
-          "no longer effective; raise stateP (see metrics.recommended_p)")
+        println(s"StreamingDedup: batch $batchId probed " +
+          f"$touchedFrac%.2f of the index base's $activeP partitions: the " +
+          "batch's probe keys land in most of them, so the directory prune " +
+          "skips little (it needs far more partitions than keys per batch)")
       phase("metrics")
     }
     // ONE commit marker, only after every table's files are in place
@@ -917,9 +908,9 @@ object StreamingDedup {
     *
     * Exactly ONE running query may own a given `stateDir` (and its
     * checkpoint) — see StreamJob's ownership note. `stateP` is the state
-    * bucket-partition count (persisted with the state; a restart must use
-    * the same value — see `checkStateP`); `compactEvery` is the compaction
-    * cadence in batches. */
+    * bucket-partition count of a fresh state dir (each base records its
+    * own, so a restart may pass any value); `compactEvery` is the
+    * compaction cadence in batches. */
   def run(spark: SparkSession, inputDir: String, stateDir: String,
       cfg: DedupConfig = DedupConfig(),
       trigger: Trigger = Trigger.AvailableNow(),
@@ -935,44 +926,42 @@ object StreamingDedup {
       .option("checkpointLocation", s"$stateDir/checkpoint")
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the ACTIVE modulus is whatever the state carries (an auto-resize
+        // the ACTIVE modulus is whatever each base carries (an auto-resize
         // in an earlier batch supersedes the launch parameter); the launch
-        // value only seeds a fresh state dir
-        val p = persistedStateP(spark, stateDir).getOrElse(stateP)
+        // value only seeds a table's first base
         processBatch(spark, batch, stateDir, cfg, batchId, metrics,
-          p, compactEvery)
+          stateP, compactEvery)
         if (autoResize) {
-          maybeAutoResize(spark, stateDir, p); ()
+          maybeAutoResize(spark, stateDir); ()
         }
       }
       .start()
   }
 
-  /** The stateP persisted with the state, if any (`<stateDir>/meta/state_p`). */
-  def persistedStateP(spark: SparkSession, stateDir: String): Option[Int] = {
-    val (fs, root) = fileSystem(spark, stateDir)
-    readP(fs, statePFile(root))
-  }
-
   /** Between-batch auto-resize: when the committed index base has outgrown
-    * the active modulus by 2× (`recommendedStateP` > 2·active — the
-    * operator trigger `metrics.recommended_p` documents), run the offline
-    * `resizeStateP` migration and return the new modulus; otherwise return
-    * `active` unchanged. Safe exactly where `run`'s foreachBatch calls it:
-    * between two processBatch invocations the streaming query is the sole
-    * owner of the state dir, which is the resize's offline precondition.
-    * The trigger reads one FS content summary — no Spark job. */
-  def maybeAutoResize(spark: SparkSession, stateDir: String, active: Int,
-      targetBytes: Long = TargetPartitionBytes): Int =
-    indexBaseRecommendedP(spark, stateDir, active, targetBytes) match {
-      case Some(r) if r > 2 * active =>
+    * its own modulus by 2× (`recommendedStateP` > 2·active — the operator
+    * trigger `metrics.recommended_p` documents), run the offline
+    * `resizeStateP` migration and return the new modulus; otherwise None.
+    * Safe exactly where `run`'s foreachBatch calls it: between two
+    * processBatch invocations the streaming query is the sole owner of the
+    * state dir, which is the resize's offline precondition. The trigger
+    * reads one FS content summary — no Spark job. */
+  def maybeAutoResize(spark: SparkSession, stateDir: String,
+      targetBytes: Long = TargetPartitionBytes): Option[Int] =
+    indexBaseRecommendedP(spark, stateDir, targetBytes) match {
+      case Some((active, r)) if r > 2 * active =>
         println(s"StreamingDedup: auto-resize stateP $active -> $r " +
           s"(index base outgrew ${2 * active} x $targetBytes B target)")
         resizeStateP(spark, stateDir, r)
-        r
-      case _ => active
+        Some(r)
+      case _ => None
     }
 
+  /** One row per batch (see [[processBatch]]). `touched_frac_idx` is the
+    * share of the index base's partitions the batch's probe keys land in:
+    * 0.0 on a batch whose index has no base naming a modulus (nothing is
+    * pruned). `state_p` is the index base's modulus (the launch `stateP`
+    * before there is one). */
   val metricsSchema: StructType = StructType(Seq(
     StructField("batch_id", LongType), StructField("new_rows", LongType),
     StructField("exact_dropped", LongType),
@@ -1034,13 +1023,11 @@ object StreamingDedup {
       ("hashes", hashSchema, Some(Seq(col("record_sha"))), Seq(col("record_sha"))),
       ("metrics", metricsSchema, None, Nil))
 
-  /** OFFLINE stateP migration: rewrite every table's committed view into a
-    * fresh base under `newP` and persist the new modulus. This is the ONLY
-    * safe way to change `stateP` on existing state — the base `p=` layout
-    * is a function of the modulus, so probing a base written under one
-    * value with touched-sets computed under another silently skips
-    * partitions holding real duplicates (`checkStateP` fails fast on
-    * exactly that).
+  /** OFFLINE stateP migration: rewrite every partitioned table's
+    * committed view into a fresh base under `newP` (a base already under
+    * `newP` with no pending batch is left as it is), fold every batch dir,
+    * and delete what that consumed. Each rewritten base records `newP` in
+    * its `_done`, so probes prune it under `newP` from then on.
     *
     * PRECONDITION (caller-enforced, same single-writer rule as ingest): no
     * ingesting query and no concurrent cluster-mode reader is running
@@ -1050,34 +1037,15 @@ object StreamingDedup {
     * Crash-safe w.r.t. the reader rule: each table's rewrite lands via
     * write-tmp → `_done` → aside-rename of the live base → commit rename
     * (a crash between the renames is healed forward from the `_done` tmp
-    * by the next compactTable on that table), the new base subsumes every
-    * batch dir (so lingering dirs stay invisible), and `meta/state_p` is
-    * updated LAST. Every table stays READABLE through a crash, but a
-    * crash mid-rewrite leaves a MIX of old- and new-modulus bases behind
-    * `meta/state_p`'s old value — so a `meta/resize_pending` marker
-    * brackets the whole operation: written before the first rewrite,
-    * removed after the meta update, and `checkStateP` refuses to start an
-    * ingesting query while it exists. The only way forward after a crash
-    * is re-running this method, which force-rewrites every base under
-    * `newP` regardless of the modulus a crashed attempt left it in. */
+    * by the next compactTable on that table), and the new base subsumes
+    * every batch dir (so lingering dirs stay invisible). A crash part-way
+    * leaves some tables under the old modulus and some under `newP`; every
+    * base names its own, so that mix is valid state to ingest into, and
+    * re-running the resize completes it. */
   def resizeStateP(spark: SparkSession, stateDir: String, newP: Int): Unit = {
     require(newP > 0, s"newP must be positive, got $newP")
     val (fs, root) = fileSystem(spark, stateDir)
-    val oldP = readP(fs, statePFile(root)).getOrElse(
-      throw new IllegalArgumentException(s"no persisted stateP at " +
-        s"$stateDir — state uninitialized, nothing to resize"))
-    // resume/crash protocol: the pending marker is written BEFORE the
-    // first base rewrite and removed only after meta/state_p is updated.
-    // While it exists, `checkStateP` refuses to ingest (bases may be a
-    // MIX of old- and new-modulus layouts) and the only way forward is
-    // re-running this method, which force-rewrites every base under
-    // `newP` regardless of what modulus a crashed attempt left it in.
-    // oldP == newP with no marker is a completed no-op; WITH a marker it
-    // must still rewrite (the crashed attempt may have targeted a
-    // different modulus than meta now claims).
-    val pending = resizePendingMarker(root)
-    if (oldP == newP && !fs.exists(pending)) return
-    writeP(fs, pending, newP)
+    require(fs.exists(root), s"no state at $stateDir — nothing to resize")
     // the previous deferred-deletion cycle is due by the offline precondition
     deleteAll(fs, readLedger(fs, root))
     writeLedger(fs, root, Nil)
@@ -1092,9 +1060,7 @@ object StreamingDedup {
     // delete immediately, no deferral cycle needed)
     staleCommitMarkers(spark, stateDir, tableSpecs)
       .foreach(p => fs.delete(p, false))
-    writeP(fs, statePFile(root), newP)
-    fs.delete(pending, false)
-    println(s"StreamingDedup: resized $stateDir stateP $oldP -> $newP " +
+    println(s"StreamingDedup: resized $stateDir to stateP $newP " +
       s"(${consumed.size} consumed dirs removed)")
   }
 
@@ -1143,10 +1109,9 @@ object StreamingDedup {
     *    to new arrivals + touched components, never to stream history, and
     *    it is usually small enough to take ConnectedComponents' local
     *    union-find path outright.
-    *  - The snapshot id is the max batch id committed via the CENTRAL
-    *    per-batch marker (all tables at once), so a snapshot can never cap
-    *    in a batch whose sig rows are missing — not even a torn LEGACY
-    *    batch whose per-dir markers covered only some tables.
+    *  - The snapshot id is the max committed batch id. A batch commits
+    *    through ONE marker covering all its tables, so a snapshot can
+    *    never cap in a batch whose sig rows are missing.
     *  - If compaction has folded batches beyond W into a base (the label
     *    snapshot lagged more than `compactEvery` batches), per-batch deltas
     *    are no longer addressable and the step falls back to one full
@@ -1181,29 +1146,17 @@ object StreamingDedup {
     val pairC = committedDirs(fsP, pairT, None)
     val baseFloor = (sigC.baseId.toSeq ++ pairC.baseId.toSeq)
       .maxOption.getOrElse(Long.MinValue)
-    // the snapshot id advances only over batches committed via the CENTRAL
-    // per-batch marker (all tables at once). Legacy batches admitted by
-    // their per-dir _done markers still contribute edges/ids below, but a
-    // TORN legacy batch (pairs marked, sigs not — a crash under the old
-    // per-table protocol) must not cap the snapshot: `upto_<id>` at such
-    // an id would make later incremental runs (`> w` filter) permanently
-    // skip the batch's sig rows once they finally commit.
-    val centralIds = committedBatchIds(fsS, commitsDir(sigT))
-    val maxBatch = ((sigC.batches ++ pairC.batches).map(_._1)
-      .filter(centralIds.contains) :+ baseFloor).max
+    val maxBatch = ((sigC.batches ++ pairC.batches).map(_._1) :+ baseFloor).max
 
     // NOTE: raw localCheckpoint (not Checkpoints.ckpt) throughout this
     // method — the label snapshot deliberately OUTLIVES any operator scope
     // (it is reused across incremental calls) and manages its own lifetime.
     def writeSnapshot(labels: DataFrame, upto: Long): DataFrame = {
       // never rewrite the LIVE snapshot in place: when the frontier has not
-      // advanced (upto == previous id — e.g. every batch beyond it is a
-      // legacy one the central-marker cap excludes), return the freshly
-      // computed labels WITHOUT writing. Overwriting the only committed
-      // snapshot would open a crash window (clearDone → overwrite →
-      // markDone) that can destroy it, for zero progress — the extra
-      // legacy edges are simply refolded on each call until their batch
-      // commits centrally or compaction folds it into the base.
+      // advanced (upto == previous id), return the freshly computed labels
+      // WITHOUT writing. Overwriting the only committed snapshot would open
+      // a crash window (clearDone → overwrite → markDone) that can destroy
+      // it, for zero progress.
       if (prevSnap.exists(_._1 == upto)) return labels.localCheckpoint()
       val dir = new Path(lt, s"upto_$upto")
       clearDone(fs, dir)

@@ -131,4 +131,34 @@ class MixOpsSpec extends AnyFunSuite {
     assert(got.map(_._3).sum === 6L)
     assert(got.map(_._4).sum === (110L + 120L + 60L))
   }
+
+  // the r5 interpreted-HOF positional hash, verbatim
+  private def posHashHof(key: org.apache.spark.sql.Column, m: Long) = {
+    val chars = filter(split(key, ""), c => length(c) === 1)
+    val codes = transform(chars, c => ascii(c).cast("long"))
+    pmod(aggregate(zip_with(codes,
+      sequence(lit(1L), greatest(size(codes).cast("long"), lit(1L))),
+      (c, i) => c * i), lit(0L), (a, x) => a + x), lit(m))
+  }
+
+  test("compiled posHash ≡ r5 HOF chain; clusterSplit assignment identical") {
+    import spark.implicits._
+    val keys = Seq("img_000_01", "img_000_10", "", "αβγ", "x",
+      "\uD83D\uDE00 emoji caption").toDF("k")
+    val old = keys.select(col("k"), posHashHof(col("k"), 1000003L).as("h"))
+      .collect().map(r => (r.getString(0), if (r.isNullAt(1)) null else r.getLong(1)))
+    val neu = keys.select(col("k"),
+      graft.ops.MixOps.posHash(col("k"), 1000003L).as("h"))
+      .collect().map(r => (r.getString(0), if (r.isNullAt(1)) null else r.getLong(1)))
+    assert(neu.toSeq == old.toSeq)
+    // split assignment end-to-end on a mixed-key cluster frame
+    val clusters = Seq(("a1", "c1"), ("a2", "c1"), ("b1", "c2"), ("", ""))
+      .toDF("image_id", "cluster_id")
+    val split = graft.ops.MixOps.clusterSplit(clusters).collect()
+      .map(r => (r.getString(0), r.getString(2))).toMap
+    // same-cluster members share a split; schema carries exactly one new col
+    assert(split("a1") == split("a2"))
+    assert(graft.ops.MixOps.clusterSplit(clusters).columns.toSeq ==
+      Seq("image_id", "cluster_id", "split"))
+  }
 }

@@ -532,4 +532,51 @@ class OpsSpec extends AnyFunSuite {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(again === kept)
   }
+
+  test("compiled fingerprint UDF ≡ r5 HOF chain incl. null/empty/unicode") {
+    import spark.implicits._
+    val docs = Seq(
+      (1L, "hello world"),
+      (2L, ""),
+      (3L, null: String),
+      (4L, "tabs\tand  spaces"),
+      (5L, "unicode: héllo wörld ✓"),
+      (6L, "a"),
+      (7L, "0123456789" * 50),
+      (8L, "\uD83D\uDE00 emoji caption") // astral plane: a surrogate pair
+    ).toDF("doc_id", "text")
+    // old: per-character HOF chain
+    val chars = filter(split(col("text"), ""), c => length(c) === 1)
+    val codes = transform(chars, c => ascii(c).cast("long"))
+    val old = docs.select(col("doc_id"),
+      pmod(aggregate(zip_with(codes,
+        sequence(lit(1L), greatest(size(codes).cast("long"), lit(1L))),
+        (c, i) => c * i), lit(0L), (a, x) => a + x), lit(1000000007L))
+        .as("fp_pos"),
+      aggregate(codes, lit(0L), (a, c) => a + c).as("fp_sum"))
+      .orderBy("doc_id").collect().toSeq
+    val neu = graft.ops.TextOps.fingerprint(docs).collect().toSeq
+    assert(neu == old)
+  }
+
+  test("merged occupancy job in multiProbeCandidates ≡ per-side hot split") {
+    import spark.implicits._
+    // probe-side flood into bucket 7 (hot among probes only), exact-side
+    // crowd in bucket 9 (hot among exact only), small mixed bucket 1
+    val rows =
+      (1L to 30L).map(i => (7L, 100 + i, false)) ++ // hot probe bucket
+      (1L to 30L).map(i => (9L, 200 + i, true)) ++  // hot exact bucket
+      Seq((9L, 300L, false),                        // probe aimed at hot exact
+        (1L, 1L, true), (1L, 2L, true), (1L, 3L, false))
+    val probes = rows.toDF("bk", "vec_id", "is_exact")
+    val got = graft.ops.EmbeddingOps.multiProbeCandidates(probes, maxBucket = 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // expected, per the r5 contract: hot EXACT bucket 9 -> sorted-adjacent
+    // chain + anchor edge from the kept probe row 300 to min member 201;
+    // hot PROBE bucket 7 dropped; bucket 1: exact-exact pair (1,2) and
+    // probe-exact pairs (1,3),(2,3)
+    val chain9 = (201L to 229L).map(i => (i, i + 1)).toSet
+    val expected = chain9 ++ Set((201L, 300L), (1L, 2L), (1L, 3L), (2L, 3L))
+    assert(got == expected)
+  }
 }

@@ -99,4 +99,17 @@ class ModalityAuditSpec extends AnyFunSuite {
     // the planted caption spans at least 2 of the ~20 planted groups
     assert(hit(0).getLong(2) >= 2L)
   }
+
+  test("captionRewrites single-evaluation form: values unchanged") {
+    import spark.implicits._
+    val pairs = Seq(("a", "b"), ("a", "c")).toDF("a", "b")
+    val caps = Seq(
+      ("a", "red car on street"),
+      ("b", "blue car on street"),
+      ("c", "red car on street") // identical -> filtered out
+    ).toDF("image_id", "caption_norm")
+    val out = graft.pipeline.ModalityAudit.captionRewrites(pairs, caps)
+      .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
+    assert(out.toSeq == Seq(("a", "b", 3.0 / 5.0)))
+  }
 }

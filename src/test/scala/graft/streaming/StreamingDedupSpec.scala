@@ -15,6 +15,32 @@ class StreamingDedupSpec extends AnyFunSuite {
     Dedup.clusterPairs(clusters).collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
 
+  /** A state dir's distinct pair log and its clusters: what a run at a
+    * varying modulus must share with a constant-stateP control run. */
+  private def pairsAndClusters(state: String)
+      : (Set[(String, String)], Map[String, String]) =
+    (StreamingDedup.pairsFromState(spark, state).collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet,
+      StreamingDedup.clustersFromState(spark, state).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap)
+
+  /** The `_done` marker of a table's newest base, as written. */
+  private def baseMarker(state: String, table: String): String = {
+    val base = new java.io.File(s"$state/$table").listFiles
+      .filter(f => f.isDirectory && f.getName.startsWith("base_"))
+      .maxBy(_.getName.stripPrefix("base_").toLong)
+    new String(Files.readAllBytes(new java.io.File(base, "_done").toPath), "UTF-8")
+  }
+
+  /** 24 images in six sorted chunks of four, one micro-batch each. */
+  private def sixChunks(): (org.apache.spark.sql.DataFrame, Seq[Seq[String]]) = {
+    val (images, _) = SyntheticCorpus.generate(spark,
+      nGroups = 6, variantsPerGroup = 3, nDistractors = 6)
+    val rows = images.localCheckpoint()
+    val ids = rows.select("image_id").collect().map(_.getString(0)).sorted
+    (rows, ids.toSeq.grouped(4).toSeq)
+  }
+
   test("streaming incremental dedup recovers the batch pipeline's pairs and the planted truth") {
     val cfg = DedupConfig()
     val root = Files.createTempDirectory("graft-stream").toString
@@ -271,24 +297,28 @@ class StreamingDedupSpec extends AnyFunSuite {
       inc2.collect().map(r => (r.getString(0), r.getString(1))).toMap)
   }
 
-  test("restarting with a different stateP fails fast instead of silently mis-pruning") {
+  test("ingesting at a stateP other than the bases' modulus: pairs and clusters equal a constant-stateP control") {
     val cfg = DedupConfig()
     val root = Files.createTempDirectory("graft-stream-statep").toString
-    val (images, _) = SyntheticCorpus.generate(spark,
-      nGroups = 3, variantsPerGroup = 2, nDistractors = 3)
-    val batch = images.localCheckpoint()
-    StreamingDedup.processBatch(spark, batch, s"$root/state", cfg,
-      batchId = 0L, stateP = 16)
-    // same value: fine (the normal restart path)
-    StreamingDedup.processBatch(spark, batch, s"$root/state", cfg,
-      batchId = 1L, stateP = 16)
-    // different value: base p= dirs were laid out under modulus 16; pruning
-    // under 32 would silently skip partitions holding real duplicates
-    val e = intercept[IllegalArgumentException] {
-      StreamingDedup.processBatch(spark, batch, s"$root/state", cfg,
-        batchId = 2L, stateP = 32)
-    }
-    assert(e.getMessage.contains("stateP mismatch"))
+    val (state, control) = (s"$root/state", s"$root/control")
+    val (rows, chunks) = sixChunks()
+    def ingest(dir: String, i: Int, p: Int): Unit =
+      StreamingDedup.processBatch(spark,
+        rows.filter(col("image_id").isin(chunks(i): _*)), dir, cfg,
+        batchId = i.toLong, metrics = true, stateP = p, compactEvery = 2)
+    chunks.indices.foreach(ingest(control, _, 8))
+    // batch 2 compacts batches 0-1 into a base under modulus 8; batches 3-5
+    // are launched at 32, so batch 4's compaction and every later probe
+    // must keep and prune under the base's own 8
+    chunks.indices.foreach(i => ingest(state, i, if (i < 3) 8 else 32))
+    assert(StreamingDedup.indexStateP(spark, state) === Some(8))
+    for (t <- Seq("index", "sigs", "ss_anchors", "ss_windows", "hashes"))
+      assert(baseMarker(state, t) === "p=8\n", t)
+    val last = StreamingDedup.metricsFromState(spark, state)
+      .orderBy(col("batch_id").desc).head()
+    assert(last.getAs[Int]("state_p") === 8)
+    assert(last.getAs[Double]("touched_frac_idx") > 0.0)
+    assert(pairsAndClusters(state) === pairsAndClusters(control))
   }
 
   test("resizeStateP migrates the base to a new modulus; probes stay correct across the boundary") {
@@ -318,11 +348,8 @@ class StreamingDedupSpec extends AnyFunSuite {
     val after = StreamingDedup.clustersFromState(spark, state)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(after === before)
-    // the old modulus now fails fast (checkStateP reads the migrated value)
-    val e = intercept[IllegalArgumentException] {
-      ingest(state, chunks(3), 3L, 8)
-    }
-    assert(e.getMessage.contains("stateP mismatch"))
+    // the rewritten bases record the new modulus
+    assert(StreamingDedup.indexStateP(spark, state) === Some(32))
     // layout: every batch dir is folded into a base whose p= values are
     // valid under the NEW modulus (and some exceed the old one — the
     // rewrite really re-bucketed, not just renamed)
@@ -334,14 +361,16 @@ class StreamingDedupSpec extends AnyFunSuite {
       .filter(_.startsWith("p=")).map(_.stripPrefix("p=").toInt)
     assert(pVals.forall(p => p >= 0 && p < 32))
     assert(pVals.exists(_ >= 8), "no partition above the old modulus")
-    // probes against the migrated base: ingest every REMAINING chunk under
-    // the new modulus — cross-boundary duplicates (variant in chunks 0-2,
-    // variant in a later chunk) are only found if pruning against the
-    // rewritten base is sound — and the final pair set must equal the
-    // constant-stateP control (which ingested all chunks)
+    // probes against the migrated base: ingest every REMAINING chunk at the
+    // OLD launch value, which the bases override — cross-boundary
+    // duplicates (variant in chunks 0-2, variant in a later chunk) are only
+    // found if pruning against the rewritten base is sound — and the final
+    // pair set must equal the constant-stateP control (which ingested all
+    // chunks)
     chunks.drop(3).zipWithIndex.foreach { case (c, i) =>
-      ingest(state, c, (3 + i).toLong, 32)
+      ingest(state, c, (3 + i).toLong, 8)
     }
+    assert(StreamingDedup.indexStateP(spark, state) === Some(32))
     val resizedPairs = pairSet(StreamingDedup.clustersFromState(spark, state))
     val controlPairs = pairSet(StreamingDedup.clustersFromState(spark, control))
     assert(resizedPairs === controlPairs)
@@ -418,20 +447,19 @@ class StreamingDedupSpec extends AnyFunSuite {
       StreamingDedup.processBatch(spark,
         rows.filter(col("image_id").isin(chunk: _*)), dir, cfg,
         batchId = id, stateP = p, compactEvery = 2)
-    // exactly run()'s autoResize wiring: active modulus = persisted state,
-    // maybeAutoResize between batches; a tiny per-partition target forces
-    // the trigger (recommended > 2x active) as soon as a base exists
+    // exactly run()'s autoResize wiring: the launch stateP on every batch
+    // (it only seeds the first bases), maybeAutoResize between batches; a
+    // tiny per-partition target forces the trigger (recommended > 2x the
+    // index base's modulus) as soon as a base exists
     var resizes = 0
     chunks.zipWithIndex.foreach { case (c, i) =>
-      val p = StreamingDedup.persistedStateP(spark, state).getOrElse(4)
-      ingest(state, c, i.toLong, p)
-      val np = StreamingDedup.maybeAutoResize(spark, state, p,
-        targetBytes = 1024L)
-      if (np != p) resizes += 1
+      ingest(state, c, i.toLong, 4)
+      if (StreamingDedup.maybeAutoResize(spark, state, targetBytes = 1024L)
+          .nonEmpty) resizes += 1
     }
     assert(resizes >= 1, "auto-resize never fired")
-    // the migrated modulus is persisted and consistent
-    val finalP = StreamingDedup.persistedStateP(spark, state).get
+    // the migrated modulus is recorded by the index base
+    val finalP = StreamingDedup.indexStateP(spark, state).get
     assert(finalP > 4)
     // control stream: constant stateP, no resize — identical dup decisions
     chunks.zipWithIndex.foreach { case (c, i) =>
@@ -451,61 +479,96 @@ class StreamingDedupSpec extends AnyFunSuite {
         s"auto-resize boundary ($resizes resizes, final stateP $finalP)")
   }
 
-  test("interrupted resize refuses ingest until re-run; re-run completes and clears the marker") {
+  test("interrupted resize: the mix of moduli ingests like a constant-stateP control; a re-run completes it") {
     val cfg = DedupConfig()
     val root = Files.createTempDirectory("graft-stream-resize-crash").toString
-    val state = s"$root/state"
-    val (images, _) = SyntheticCorpus.generate(spark,
-      nGroups = 4, variantsPerGroup = 2, nDistractors = 4)
-    val rows = images.localCheckpoint()
-    StreamingDedup.processBatch(spark, rows, state, cfg,
-      batchId = 0L, stateP = 8, compactEvery = 1)
-    // simulate a crash mid-resize: the pending marker exists but
-    // meta/state_p still holds the old modulus — SOME bases may already be
-    // laid out under the new one, so ingesting at either modulus could
-    // silently mis-prune
-    val pending = new java.io.File(s"$state/meta/resize_pending")
-    assert(pending.createNewFile())
-    val e = intercept[IllegalArgumentException] {
-      StreamingDedup.processBatch(spark, rows, state, cfg,
-        batchId = 1L, stateP = 8)
-    }
-    assert(e.getMessage.contains("resize"))
-    // the advertised recovery: re-run the resize to completion — it force-
-    // rewrites every base under the target modulus whatever a crashed
-    // attempt left behind, then clears the marker
+    val (state, control) = (s"$root/state", s"$root/control")
+    val (rows, chunks) = sixChunks()
+    def ingest(dir: String, i: Int): Unit =
+      StreamingDedup.processBatch(spark,
+        rows.filter(col("image_id").isin(chunks(i): _*)), dir, cfg,
+        batchId = i.toLong, stateP = 8, compactEvery = 2)
+    chunks.indices.foreach(ingest(control, _))
+    (0 to 2).foreach(ingest(state, _)) // batch 2 compacts: bases under 8
+    // a resize that stops part-way: a file in the index's batch dir that is
+    // not parquet fails the index rewrite, while every other table's
+    // rewrite completes under 32
+    val bad = new java.io.File(s"$state/index/batch_2/zz-not-parquet.parquet")
+    Files.write(bad.toPath, "not parquet".getBytes("UTF-8"))
+    intercept[Exception](StreamingDedup.resizeStateP(spark, state, 32))
+    assert(bad.delete())
+    assert(StreamingDedup.indexStateP(spark, state) === Some(8))
+    for (t <- Seq("sigs", "ss_anchors", "ss_windows", "hashes"))
+      assert(baseMarker(state, t) === "p=32\n", t)
+    // ingest into the mix: each table is pruned under its own modulus
+    (3 until chunks.size).foreach(ingest(state, _))
+    assert(StreamingDedup.indexStateP(spark, state) === Some(8))
+    assert(baseMarker(state, "sigs") === "p=32\n")
+    val mixed = pairsAndClusters(state)
+    assert(mixed === pairsAndClusters(control))
+    // re-running the resize completes it and changes no row
     StreamingDedup.resizeStateP(spark, state, 32)
-    assert(!pending.exists())
-    StreamingDedup.processBatch(spark, rows, state, cfg,
-      batchId = 1L, stateP = 32)
+    for (t <- Seq("index", "sigs", "ss_anchors", "ss_windows", "hashes"))
+      assert(baseMarker(state, t) === "p=32\n", t)
+    assert(pairsAndClusters(state) === mixed)
   }
 
-  test("pre-meta state (base dirs, no persisted stateP) is refused, not blindly adopted") {
+  test("resizing bases with no pending batch rewrites them in place and keeps every row") {
     val cfg = DedupConfig()
-    val root = Files.createTempDirectory("graft-stream-premeta").toString
+    val root = Files.createTempDirectory("graft-stream-resize-twice").toString
     val state = s"$root/state"
     val (images, _) = SyntheticCorpus.generate(spark,
       nGroups = 4, variantsPerGroup = 2, nDistractors = 4)
-    val rows = images.localCheckpoint()
-    StreamingDedup.processBatch(spark, rows, state, cfg,
-      batchId = 0L, stateP = 16, compactEvery = 1)
-    // state written by a version that did not persist the modulus: the
-    // bases' p= layout is a function of an UNKNOWN stateP, so adopting
-    // this run's value would mis-prune exactly like a mismatch
-    val meta = new java.io.File(s"$state/meta/state_p")
-    assert(meta.delete())
-    val e = intercept[IllegalArgumentException] {
-      StreamingDedup.processBatch(spark, rows, state, cfg,
-        batchId = 1L, stateP = 32)
-    }
-    assert(e.getMessage.contains("meta/state_p"))
-    // the documented operator fix: restore the original value, then ingest
-    java.nio.file.Files.write(meta.toPath, "16\n".getBytes("UTF-8"))
-    StreamingDedup.processBatch(spark, rows, state, cfg,
-      batchId = 1L, stateP = 16)
+    val part = pmod(crc32(col("image_id")), lit(2))
+    StreamingDedup.processBatch(spark, images.filter(part === 0), state, cfg,
+      batchId = 0L, stateP = 4, compactEvery = 1)
+    StreamingDedup.processBatch(spark, images.filter(part === 1), state, cfg,
+      batchId = 1L, stateP = 4, compactEvery = 1)
+    val before = pairsAndClusters(state)
+    StreamingDedup.resizeStateP(spark, state, 8) // folds batch 1 into base_1
+    StreamingDedup.resizeStateP(spark, state, 16) // rewrites base_1 in place
+    assert(StreamingDedup.indexStateP(spark, state) === Some(16))
+    assert(pairsAndClusters(state) === before)
+    // a repeat at the same modulus leaves every base as it is
+    val marker = new java.io.File(s"$state/index/base_1/_done")
+    val stamp = marker.lastModified
+    Thread.sleep(1100)
+    StreamingDedup.resizeStateP(spark, state, 16)
+    assert(marker.lastModified === stamp)
+    assert(pairsAndClusters(state) === before)
   }
 
-  test("torn legacy batch (per-dir markers on some tables) cannot cap the label snapshot") {
+  test("a base whose _done names no modulus is read whole; pairs and clusters equal a constant-stateP control") {
+    val cfg = DedupConfig()
+    val root = Files.createTempDirectory("graft-stream-unmarked").toString
+    val (state, control) = (s"$root/state", s"$root/control")
+    val (rows, chunks) = sixChunks()
+    def ingest(dir: String, i: Int, p: Int): Unit =
+      StreamingDedup.processBatch(spark,
+        rows.filter(col("image_id").isin(chunks(i): _*)), dir, cfg,
+        batchId = i.toLong, metrics = true, stateP = p, compactEvery = 2)
+    chunks.indices.foreach(ingest(control, _, 16))
+    (0 to 2).foreach(ingest(state, _, 16)) // batch 2 compacts under 16
+    // empty every base marker, as bases were committed before they
+    // recorded their modulus: the p= layout is of an unknown modulus
+    for (t <- new java.io.File(state).listFiles if t.isDirectory;
+         b <- t.listFiles if b.isDirectory && b.getName.startsWith("base_"))
+      Files.write(new java.io.File(b, "_done").toPath, Array.emptyByteArray)
+    assert(StreamingDedup.indexStateP(spark, state) === None)
+    // batch 3 runs at a different launch value: nothing is pruned
+    ingest(state, 3, 32)
+    val m3 = StreamingDedup.metricsFromState(spark, state)
+      .filter(col("batch_id") === 3L).head()
+    assert(m3.getAs[Double]("touched_frac_idx") === 0.0)
+    assert(m3.getAs[Long]("state_files_read") ===
+      m3.getAs[Long]("state_files_total"))
+    // batch 4 compacts: the new bases take the launch value and record it
+    (4 until chunks.size).foreach(ingest(state, _, 32))
+    assert(StreamingDedup.indexStateP(spark, state) === Some(32))
+    assert(pairsAndClusters(state) === pairsAndClusters(control))
+  }
+
+  test("a batch dir with a per-dir _done but no commit marker is invisible to readCommitted and clustersIncremental") {
     val cfg = DedupConfig()
     val root = Files.createTempDirectory("graft-stream-torn").toString
     val state = s"$root/state"
@@ -518,37 +581,74 @@ class StreamingDedupSpec extends AnyFunSuite {
       StreamingDedup.processBatch(spark,
         rows.filter(col("image_id").isin(chunk: _*)), state, cfg,
         batchId = id, stateP = 16, compactEvery = 100)
+    def sigIds() = StreamingDedup.readCommitted(spark, state, "sigs",
+        new org.apache.spark.sql.types.StructType().add("image_id", "string"))
+      .collect().map(_.getString(0)).toSet
+    def labelIds() = StreamingDedup.clustersIncremental(spark, state)
+      .select("image_id").collect().map(_.getString(0)).toSet
     ingest(chunks(0), 0L); ingest(chunks(1), 1L)
-    StreamingDedup.clustersIncremental(spark, state)
+    val pairsBefore = pairsAndClusters(state)._1
+    val labeledBefore = labelIds()
     assert(new java.io.File(s"$state/labels/upto_1").isDirectory)
     ingest(chunks(2), 2L)
-    // rewrite batch 2's commit as a TORN legacy batch: central marker gone,
-    // per-dir _done on pairs only (the pre-unified protocol crashed between
-    // per-table markers) — sigs/batch_2 exists but is uncommitted
+    // batch 2 without its commit marker, every table's dir carrying a
+    // per-dir _done (a marker form no writer uses)
     assert(new java.io.File(s"$state/commits/batch_2").delete())
-    assert(new java.io.File(s"$state/pairs/batch_2/_done").createNewFile())
-    StreamingDedup.clustersIncremental(spark, state)
-    // the snapshot must NOT advance to 2: batch 2's sig rows are not yet
-    // visible, and an upto_2 snapshot would make every later incremental
-    // run (strictly-newer filter) skip them forever once they commit.
-    // It must also not be RE-WRITTEN in place: overwriting the only
-    // committed snapshot for zero progress opens a crash window that can
-    // destroy it — the _done marker must survive untouched
-    assert(new java.io.File(s"$state/labels/upto_1").isDirectory)
-    assert(new java.io.File(s"$state/labels/upto_1/_done").exists(),
-      "live snapshot was rewritten in place (commit marker cycled)")
+    for (t <- Seq("index", "sigs", "ss_anchors", "ss_windows", "pairs", "hashes"))
+      assert(new java.io.File(s"$state/$t/batch_2/_done").createNewFile(), t)
+    assert(sigIds().intersect(chunks(2).toSet).isEmpty)
+    assert(StreamingDedup.pairsFromState(spark, state).collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet === pairsBefore)
+    assert(labelIds() === labeledBefore)
+    // the live snapshot is neither advanced nor rewritten in place
+    assert(new java.io.File(s"$state/labels/upto_1/_done").exists())
     assert(!new java.io.File(s"$state/labels/upto_2").exists())
-    // batch 2 commits properly (replay under the unified protocol)
+    // batch 2 commits: the incremental labels take it in and equal the
+    // from-scratch recompute
     assert(new java.io.File(s"$state/commits/batch_2").createNewFile())
     val labels = StreamingDedup.clustersIncremental(spark, state)
-    val labeled = labels.select("image_id").collect().map(_.getString(0)).toSet
-    assert(ids.toSet.subsetOf(labeled),
-      s"batch-2 ids missing from labels: ${ids.toSet.diff(labeled).size}")
-    // and the incremental result equals the from-scratch recompute
-    val full = StreamingDedup.clustersFromState(spark, state)
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    assert(ids.toSet.subsetOf(
+      labels.select("image_id").collect().map(_.getString(0)).toSet))
     assert(labels.collect().map(r => (r.getString(0), r.getString(1))).toSet
-      === full)
+      === StreamingDedup.clustersFromState(spark, state)
+        .collect().map(r => (r.getString(0), r.getString(1))).toSet)
+  }
+
+  test("a copied state dir compacts and resizes without deleting the original's deferred dirs") {
+    val cfg = DedupConfig()
+    val root = Files.createTempDirectory("graft-stream-ledger").toString
+    val state = s"$root/state"
+    val (rows, chunks) = sixChunks()
+    def ingest(dir: String, i: Int): Unit =
+      StreamingDedup.processBatch(spark,
+        rows.filter(col("image_id").isin(chunks(i): _*)), dir, cfg,
+        batchId = i.toLong, stateP = 8, compactEvery = 2)
+    (0 to 3).foreach(ingest(state, _)) // batch 2 compacts, deferring 0-1
+    val ledger = new java.io.File(s"$state/_pending_delete")
+    val entries = scala.io.Source.fromFile(ledger).getLines().toList
+    assert(entries.contains("index/batch_0"), entries)
+    assert(entries.forall(e => !e.startsWith("/") && !e.contains(":")), entries)
+    val deferred = Seq("index", "sigs", "pairs").flatMap(t =>
+      Seq(0, 1).map(i => new java.io.File(s"$state/$t/batch_$i")))
+    assert(deferred.forall(_.isDirectory))
+    def compactAndResizeCopy(copy: String): Unit = {
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(state), new java.io.File(copy))
+      ingest(copy, 4) // compacts the copy, deleting its deferred dirs
+      StreamingDedup.resizeStateP(spark, copy, 16)
+      assert(!new java.io.File(s"$copy/index/batch_0").exists())
+      assert(deferred.forall(_.isDirectory), "the copy deleted the original's dirs")
+    }
+    compactAndResizeCopy(s"$root/copyA")
+    // a ledger of absolute URIs, the form older ledgers held: entries
+    // under another root are skipped, entries under this one are honored
+    val absolute = entries.map(e => "file:" + new java.io.File(state, e).getAbsolutePath)
+    Files.write(ledger.toPath, absolute.mkString("", "\n", "\n").getBytes("UTF-8"))
+    new java.io.File(state, "._pending_delete.crc").delete() // stale checksum
+    compactAndResizeCopy(s"$root/copyB")
+    // the original's own next compaction removes them, one cycle late
+    ingest(state, 4)
+    assert(deferred.forall(!_.exists()))
   }
 
   test("metrics are committed state: batch-atomic with the data tables, bounded by compaction") {
